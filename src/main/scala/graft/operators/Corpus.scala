@@ -1314,6 +1314,9 @@ object Corpus {
     vocabDivergence(cnts(pDocs), cnts(qDocs), alpha)
   }
 
+  /** Distinct-domain cap of [[vocabDivergenceBy]]. */
+  private[graft] val MaxDivergenceDomains = 4096
+
   /** PER-DOMAIN [[vocabDivergence]] — which DOMAIN is drifting, not
     * just whether the corpus moved (pairs with [[temperatureBudgets]]
     * re-weighting: the domain whose JS against the reference jumped is
@@ -1332,8 +1335,9 @@ object Corpus {
     * Scale: ONE keyed full-outer hash join + one keyed aggregation,
     * no per-domain driver loop. The reference counts replicate once
     * per distinct domain (vocab × nDomains rows — domains are bounded
-    * in the mixing regime); per-domain totals are a domain-bounded
-    * aggregate broadcast back into the term pass. */
+    * in the mixing regime, and more than [[MaxDivergenceDomains]] fail
+    * by name); per-domain totals are a domain-bounded aggregate
+    * broadcast back into the term pass. */
   def vocabDivergenceBy(pCounts: DataFrame, domainCol: String,
                         qCounts: DataFrame,
                         alpha: Double = 0.5): DataFrame = {
@@ -1350,7 +1354,12 @@ object Corpus {
     // not the crossJoin-of-broadcast shape PlanGuardSpec bans as
     // BroadcastNestedLoopJoin. The collect also runs the null-domain
     // guard, so a NULL domain still fails by name before any join.
-    val doms = pc.select(col("__d")).distinct().collect().map(_.get(0))
+    val doms = pc.select(col("__d")).distinct()
+      .limit(MaxDivergenceDomains + 1).collect().map(_.get(0))
+    require(doms.length <= MaxDivergenceDomains,
+      s"vocabDivergenceBy: more than $MaxDivergenceDomains distinct " +
+        s"$domainCol values — each one becomes a literal in the plan and " +
+        "a copy of the reference vocabulary; bucket the domains upstream")
     val dType = pc.schema("__d").dataType
     val qd =
       if (doms.isEmpty)

@@ -27,8 +27,16 @@ import org.apache.spark.sql.functions._
   * nobody touched are never read, and the view files they live in are
   * carried into the new manifest by reference.
   *
+  * GROUP BY views ([[refreshAgg]]) fold instead of recomputing: the
+  * tick's signed per-group delta, the rows of the view files the
+  * merge's affected-file probe picks, and min/max rescan rows for
+  * delete-touched groups meet in ONE grouped aggregation inside the
+  * merge ([[Snapshots.rewriteAffected]], the loop [[Snapshots.
+  * mergeCommit]] runs too) — each affected view file is read once per
+  * tick.
+  *
   * I/O is O(churn) too, not just compute: every re-read of an input
-  * or the view is routed through manifest-level file pruning
+  * or a join view is routed through manifest-level file pruning
   * ([[Snapshots.readPrunedBy]]) on the affected keys' bounds — the
   * semi-join then filters rows only within the files that can hold
   * churned keys. Inputs committed with `statsCol` on the join/group
@@ -531,39 +539,6 @@ object IncrementalViews {
     f.create(new Path(root, s"${t.kind}-F${t.from}-T${t.to}"), true).close()
   }
 
-  /** Incrementally-maintained GROUP BY view over ONE snapshot table:
-    * `viewDir` holds per-group `sum_<c>` (exact decimal accumulators),
-    * `__cnt`, and optionally `min_<c>`/`max_<c>`, current as of the
-    * source's latest version.
-    *
-    * Each call processes ONE tick covering EVERY source version
-    * committed since the previous tick — a consumer that fell N
-    * versions behind catches up with a single diff(done → latest),
-    * one delta fold, and one merge, not N of each. Exactly-once via
-    * the same pinned write-ahead intent as [[refreshJoin]] plus the
-    * view manifest's batch fence (`batchId` = the tick's target
-    * version).
-    *
-    * Sums and counts are maintained PURELY from the change feed —
-    * inserts add, deletes subtract, no source rescan ever; decimal
-    * accumulation makes the fold exact and order-independent, so the
-    * maintained totals equal a from-scratch aggregation bit for bit.
-    * Min/max fold from the delta alone for groups the tick only
-    * INSERTED into (monotone); only groups that saw a delete are
-    * re-scanned from the source as-of the consumed version — and that
-    * rescan opens only the files whose stats range can hold those
-    * groups. Still O(churned groups), never O(table); an append-only
-    * tick does zero source re-reads. A group whose count reaches zero
-    * leaves the view. Groups with NULL keys aggregate like SQL GROUP
-    * BY (null-safe joins throughout; pruning stands down when a null
-    * group is affected). Returns the source versions folded this
-    * call.
-    *
-    * `where` makes it a FILTERED view — `SELECT ... FROM src WHERE
-    * <where> GROUP BY keys` kept current. The predicate is applied to
-    * the change feed (a delta row outside it can't move the view) and
-    * to the min/max rescan, so it must reference only the source's
-    * data columns and be deterministic. */
   /** The one-input pinned-tick protocol shared by every single-source
     * view ([[refreshAgg]], [[refreshTopK]]): resolve or replay ONE
     * intent covering every pending source version, hand `work` the
@@ -615,11 +590,49 @@ object IncrementalViews {
     ((tick.from + 1) to tick.to)
   }
 
-  /** (See the object doc for the view model.) `transform` makes the
-    * view DERIVED — `SELECT ... FROM src LATERAL VIEW ... GROUP BY
-    * keys` kept current: a row-local expansion (explode a token
-    * array, project derived columns, drop rows) applied AFTER
-    * `where`, to the feed and to the min/max rescan alike. Contract:
+  /** Incrementally-maintained GROUP BY view over ONE snapshot table:
+    * `viewDir` holds per-group `sum_<c>` (exact decimal accumulators),
+    * `__cnt`, and optionally `min_<c>`/`max_<c>`, current as of the
+    * source's latest version.
+    *
+    * Each call processes ONE tick covering EVERY source version
+    * committed since the previous tick — a consumer that fell N
+    * versions behind catches up with a single diff(done → latest) and
+    * one fold, not N of each. Exactly-once via the same pinned
+    * write-ahead intent as [[refreshJoin]] plus the view manifest's
+    * batch fence (`batchId` = the tick's target version).
+    *
+    * A tick is ONE copy-on-write pass over the view: the feed
+    * aggregates into a signed per-group delta, the merge's affected-
+    * file probe on the head group key picks the view files to rewrite,
+    * and those files' rows, the delta and the min/max rescan rows fold
+    * in one grouped aggregation that is written and published under
+    * the batch fence — each affected view file is read once.
+    * Sums and counts come PURELY from the change feed — inserts add,
+    * deletes subtract; decimal accumulation makes the fold exact and
+    * order-independent, so the maintained totals equal a from-scratch
+    * aggregation bit for bit. Min/max fold from the delta alone for
+    * groups the tick only INSERTED into (monotone); only groups that
+    * saw a delete are re-scanned from the source as-of the consumed
+    * version — and that rescan opens only the files whose stats range
+    * can hold those groups. O(churned groups + affected view files),
+    * never O(table); an append-only tick does zero source re-reads. A
+    * group whose count reaches zero leaves the view. Groups with NULL
+    * keys aggregate like SQL GROUP BY (null-safe grouping; pruning
+    * stands down when a null group is affected). Returns the source
+    * versions folded this call.
+    *
+    * `where` makes it a FILTERED view — `SELECT ... FROM src WHERE
+    * <where> GROUP BY keys` kept current. The predicate is applied to
+    * the change feed (a delta row outside it can't move the view) and
+    * to the min/max rescan, so it must reference only the source's
+    * data columns and be deterministic.
+    *
+    * `transform` makes the view DERIVED — `SELECT ... FROM src
+    * LATERAL VIEW ... GROUP BY keys` kept current: a row-local
+    * expansion (explode a token array, project derived columns, drop
+    * rows) applied AFTER `where`, to the feed and to the min/max
+    * rescan alike. Contract:
     * deterministic, each output row derived from exactly ONE input
     * row, and the `__change` column passed through untouched
     * (select/filter/withColumn/explode all qualify) — every derived
@@ -642,6 +655,8 @@ object IncrementalViews {
     }
   }
 
+  /** One [[refreshAgg]] tick: fold the pinned feed `changes0` into
+    * the view through [[Snapshots.rewriteAffected]], fenced at `v`. */
   private def applyAggDelta(spark: SparkSession, srcDir: String,
                             viewDir: String, groupKeys: Seq[String],
                             sumCols: Seq[String], sumScale: Int,
@@ -652,8 +667,8 @@ object IncrementalViews {
     val dec = s"decimal(30,$sumScale)"
     // the feed is consumed in ONE streaming aggregation pass — never
     // cached (the initial tick's feed is the whole source; an O(table)
-    // persist would be the scale bug). What IS reused three ways
-    // (bounds, fold, delete-keys) is `delta`: O(churned groups).
+    // persist would be the scale bug). What IS reused (affected-file
+    // probe, delete keys, fold) is `delta`: O(churned groups).
     val changes = {
       val filtered = where.foldLeft(changes0)(_.filter(_))
       val derived = transform.foldLeft(filtered)((d, t) => t(d))
@@ -671,120 +686,82 @@ object IncrementalViews {
     val dAggs = (sumCols.map { c =>
       val v = col(c).cast(dec)
       sum(when(col("__change") === lit("insert"), v).otherwise(-v))
-        .cast(dec).as(s"__d_$c")
+        .cast(dec).as(s"sum_$c")
     } :+
-      sum(sign.cast("long")).as("__d_cnt")) ++
+      sum(sign.cast("long")).as("__cnt")) ++
       // per-group min/max over the tick's INSERTS (null when the
       // group saw only deletes) + a delete flag: inserts fold into
       // min/max monotonically, deletes force the group's rescan
       minMaxCols.flatMap(c => Seq(
-        min(when(col("__change") === "insert", col(c))).as(s"__i_min_$c"),
-        max(when(col("__change") === "insert", col(c))).as(s"__i_max_$c"))) :+
+        min(when(col("__change") === "insert", col(c))).as(s"min_$c"),
+        max(when(col("__change") === "insert", col(c))).as(s"max_$c"))) :+
       max(when(col("__change") === "delete", lit(1)).otherwise(lit(0)))
         .as("__has_del")
     val delta = changes.groupBy(groupKeys.map(col): _*)
       .agg(dAggs.head, dAggs.tail: _*).persist()
     try {
-      val affKeys = delta.select(groupKeys.map(col): _*)
-      def nullSafeOn(a: String, b: String) =
-        groupKeys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)
-
-      val viewExists = Snapshots.latestVersion(spark, viewDir).isDefined
       val viewCols = groupKeys ++ sumCols.map(c => s"sum_$c") ++ Seq("__cnt") ++
         minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
-      val (_, specs) = keySpecs(affKeys, groupKeys, viewDir,
-        coarse = Snapshots.cachedFileCount(spark, viewDir).exists(_ <= 8))
-      val oldAff =
-        if (!viewExists)
-          // shape an empty frame with the view's schema (typed nulls)
-          delta.limit(0).select(
-            (groupKeys.map(col) ++
-              sumCols.map(c => lit(null).cast(dec).as(s"sum_$c")) :+
-              lit(null).cast("long").as("__cnt")) ++
-              minMaxCols.flatMap(c => Seq(
-                lit(null).cast(changes.schema(c).dataType).as(s"min_$c"),
-                lit(null).cast(changes.schema(c).dataType).as(s"max_$c"))): _*)
-        else readForSpecs(spark, viewDir, None, specs).as("vw")
-          .join(affKeys.as("ak"), nullSafeOn("vw", "ak"), "left_semi")
-
-      val folded = oldAff.as("o").join(delta.as("d"),
-          nullSafeOn("o", "d"), "full_outer")
-        .select(
-          (groupKeys.map(k => coalesce(col(s"o.$k"), col(s"d.$k")).as(k)) ++
-            sumCols.map(c =>
-              (coalesce(col(s"o.sum_$c"), lit(0).cast(dec)) +
-                coalesce(col(s"d.__d_$c"), lit(0).cast(dec)))
-                .cast(dec).as(s"sum_$c")) :+
-            (coalesce(col("o.__cnt"), lit(0L)) +
-              coalesce(col("d.__d_cnt"), lit(0L))).as("__cnt")) ++
-            // carried for the insert-only fold below; null-safe:
-            // least/greatest skip nulls (new group → delta value)
-            minMaxCols.flatMap(c => Seq(
-              least(col(s"o.min_$c"), col(s"d.__i_min_$c")).as(s"__f_min_$c"),
-              greatest(col(s"o.max_$c"), col(s"d.__i_max_$c")).as(s"__f_max_$c")
-            )) :+
-            coalesce(col("d.__has_del"), lit(0)).as("__has_del"): _*)
-
-      val withMm =
-        if (minMaxCols.isEmpty) folded
+      // min/max are not delta-foldable under deletes: re-scan the rows
+      // of just the groups a DELETE touched, from the source AS-OF the
+      // consumed version (pinned — a replay sees identical data),
+      // opening only the files whose stats can hold those groups. An
+      // append-only tick does ZERO source re-reads. Lazy: a fenced
+      // replay never pays for it.
+      lazy val rescan: Option[DataFrame] =
+        if (minMaxCols.isEmpty) None
         else {
-          // min/max are not delta-foldable under deletes: re-scan just
-          // the groups a DELETE touched, from the source AS-OF the
-          // consumed version (pinned — a replay sees identical data),
-          // opening only the files whose stats can hold those groups.
-          // Insert-only groups keep the monotone fold from above —
-          // an append-only tick does ZERO source re-reads.
           val delKeys = delta.filter(col("__has_del") === 1)
             .select(groupKeys.map(col): _*)
           val (nDel, delSpecs) = keySpecs(delKeys, groupKeys,
             viewDir + "#del",
             coarse = Snapshots.cachedFileCount(spark, srcDir).exists(_ <= 8))
-          val mm =
-            if (nDel == 0L) {
-              // build an empty, correctly-typed frame without
-              // touching the source
-              val empty = minMaxCols.flatMap(c => Seq(
-                lit(null).cast(changes.schema(c).dataType).as(s"min_$c"),
-                lit(null).cast(changes.schema(c).dataType).as(s"max_$c")))
-              delta.limit(0).select(groupKeys.map(col) ++ empty: _*)
-            } else {
-              // the rescan sees the source through the same lens as
-              // the feed: where, then transform (fed a synthetic
-              // "insert" __change to honor the transform contract)
-              val lensed = {
-                val filtered = where.foldLeft(
-                  readForSpecs(spark, srcDir, Some(v), delSpecs))(_.filter(_))
-                transform match {
-                  case None => filtered
-                  case Some(t) =>
-                    t(filtered.withColumn("__change", lit("insert")))
-                      .drop("__change")
-                }
-              }
-              val srcAff = lensed.as("s")
-                .join(delKeys.as("ak2"), nullSafeOn("s", "ak2"), "left_semi")
-              val mmAggs = minMaxCols.flatMap(c =>
-                Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-              srcAff.groupBy(groupKeys.map(col): _*)
-                .agg(mmAggs.head, mmAggs.tail: _*)
+          if (nDel == 0L) None
+          else {
+            // the rescan sees the source through the same lens as the
+            // feed: where, then transform (fed a synthetic "insert"
+            // __change to honor the transform contract)
+            val filtered = where.foldLeft(
+              readForSpecs(spark, srcDir, Some(v), delSpecs))(_.filter(_))
+            val lensed = transform match {
+              case None => filtered
+              case Some(t) =>
+                t(filtered.withColumn("__change", lit("insert")))
+                  .drop("__change")
             }
-          folded.as("f").join(mm.as("m"), nullSafeOn("f", "m"), "left_outer")
-            .select((groupKeys ++ sumCols.map(c => s"sum_$c") :+ "__cnt")
-              .map(c => col(s"f.$c")) ++
-              minMaxCols.flatMap(c => Seq(
-                when(col("f.__has_del") === 1, col(s"m.min_$c"))
-                  .otherwise(col(s"f.__f_min_$c")).as(s"min_$c"),
-                when(col("f.__has_del") === 1, col(s"m.max_$c"))
-                  .otherwise(col(s"f.__f_max_$c")).as(s"max_$c"))): _*)
+            Some(nullSafeSemi(lensed, delKeys, groupKeys)
+              .select(groupKeys.map(col) ++ minMaxCols.flatMap(c => Seq(
+                col(c).as(s"__r_min_$c"), col(c).as(s"__r_max_$c"))): _*))
+          }
         }
-
-      val out = withMm
-        .withColumn("__op", when(col("__cnt") === 0L, lit("d")).otherwise(lit("u")))
-        .withColumn("__seq", lit(v))
-        .select((viewCols :+ "__op" :+ "__seq").map(col): _*)
-      Snapshots.mergeStreamBatch(out, viewDir, v,
-        keyCols = groupKeys, opCol = "__op", seqCol = "__seq",
-        pruneCol = Some(groupKeys.head), clusterBy = Some(groupKeys.head))
+      // ONE grouped aggregation over the affected view files' rows, the
+      // signed delta and the rescan rows: sums and counts add, min/max
+      // take the rescan for delete-touched groups and otherwise the
+      // least/greatest of view and inserts; emptied groups drop out.
+      // Groups of the affected files the tick never touched fold to
+      // themselves (one row each).
+      def fold(view: Option[DataFrame]): DataFrame = {
+        val hasDel = max(col("__has_del")) === 1
+        def mm(c: String, f: Column => Column) = {
+          val kept = f(col(c))
+          (if (rescan.isEmpty) kept
+           else when(hasDel, f(col(s"__r_$c"))).otherwise(kept)).as(c)
+        }
+        val aggs = sumCols.map(c => coalesce(sum(col(s"sum_$c")),
+            lit(0).cast(dec)).cast(dec).as(s"sum_$c")) ++
+          Seq(sum(col("__cnt")).as("__cnt")) ++
+          minMaxCols.flatMap(c =>
+            Seq(mm(s"min_$c", min(_: Column)), mm(s"max_$c", max(_: Column))))
+        (view.map(_.select(viewCols.map(col) :+ lit(0).as("__has_del"): _*))
+          .toSeq ++ Seq(delta) ++ rescan)
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+          .groupBy(groupKeys.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*)
+          .filter(col("__cnt") =!= 0L)
+          .select(viewCols.map(col): _*)
+      }
+      Snapshots.rewriteAffected(spark, viewDir, delta, groupKeys.head,
+        batchId = v, clusterBy = Some(groupKeys.head))(fold)
       ()
     } finally delta.unpersist()
   }

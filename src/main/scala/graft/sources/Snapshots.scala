@@ -208,6 +208,12 @@ object Snapshots {
     }
   }
 
+  /** `version`, or the latest one when None. */
+  private def resolve(spark: SparkSession, dir: String,
+                      version: Option[Long]): Long =
+    version.orElse(latestVersion(spark, dir)).getOrElse(
+      throw new IllegalArgumentException(s"no snapshots at $dir"))
+
   /** Highest version published at or before `tsMillis` — wall-clock
     * time travel ("the table as the 09:00 dashboard saw it"): pass
     * the result to [[read]]. Publish time is the `committed_at`
@@ -256,8 +262,7 @@ object Snapshots {
     * batch_id, committed_at). */
   def manifest(spark: SparkSession, dir: String,
                version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $dir"))
+    val v = resolve(spark, dir, version)
     manifestRows(spark, dir, v) match {
       case Some(cm) => spark.createDataFrame(
         java.util.Arrays.asList(cm.rows: _*), cm.schema)
@@ -347,7 +352,8 @@ object Snapshots {
     *  - string min/max compare as UNSIGNED BYTES (parquet's UTF8
     *    order == Spark's UTF8String order); parquet drops oversized
     *    (>4 KB) binary stats entirely, which reads as "no value" and
-    *    bails.
+    *    bails; so does a configured `parquet.statistics.truncate.length`
+    *    (truncated binary stats are surrogate bounds, not values).
     *  - a block whose stats are missing/unverifiable bails the whole
     *    commit to the scan path; an all-null column yields null
     *    min/max exactly like `min(col)` over it.
@@ -370,6 +376,14 @@ object Snapshots {
     }
     if (!statsCols.forall(c => dfSchema.fieldNames.contains(c) &&
         supported(dfSchema(c).dataType))) return None
+    // a writer-side `parquet.statistics.truncate.length` makes binary
+    // chunk stats SURROGATE bounds (prefix-cut min, incremented max):
+    // still conservative, but no longer the exact values the scan
+    // records — take the scan instead
+    val truncKey = "parquet.statistics.truncate.length"
+    if ((Option(spark.sparkContext.hadoopConfiguration.get(truncKey)) ++
+        spark.conf.getOption(truncKey))
+        .exists(_.trim.toLong < Int.MaxValue)) return None
     val f = fs(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val parts = f.listStatus(new Path(commitDir))
@@ -607,7 +621,7 @@ object Snapshots {
     while (true) {
       val v = latestVersion(spark, dir).getOrElse(
         throw new IllegalArgumentException(s"no snapshots at $dir"))
-      val written = spark.read.parquet(filesOf(spark, dir, Some(v)): _*)
+      val written = readFiles(spark, dir, v, filesOf(spark, dir, Some(v)))
       val entries0 = fileEntries(written, statsCols, bloomCols, bloomFpp)
       // the retrofit re-lists EXISTING files: their per-file schemas
       // are whatever the original commits recorded — carry them by
@@ -977,8 +991,46 @@ object Snapshots {
     val dataCols = changes.columns.filterNot(c => c == opCol || c == seqCol)
     val pc = pruneCol.getOrElse(keyCols.head)
     require(dataCols.contains(pc), s"changes must carry $pc")
-    graft.Jobs.labeled(spark, "snap:merge") {
-    // the change batch is O(churn) by this function's contract, and
+    val valueCols = dataCols.filterNot(keyCols.contains)
+    val changeRows = changes.select(
+      dataCols.map(col) :+ col(opCol) :+ col(seqCol): _*)
+    rewriteAffected(spark, dir, changes, pc, batchId, bloomCols, bloomFpp,
+        extraStatsCols, clusterBy) { base =>
+      // existing rows rank below every change (op 'u' at the lowest seq)
+      base.fold(changeRows)(_.select(dataCols.map(col) :+ lit("u").as(opCol) :+
+          lit(Long.MinValue).as(seqCol): _*).unionByName(changeRows))
+        .groupBy(keyCols.map(col): _*)
+        .agg(max_by(struct((valueCols.map(col) :+ col(opCol)): _*),
+          struct(col(seqCol), col(opCol))).as("__w"))
+        .select(keyCols.map(col) ++ valueCols.map(c => col(s"__w.$c")) :+
+          col(s"__w.$opCol"): _*)
+        .filter(col(opCol) =!= "d")
+        .select(dataCols.map(col): _*)
+    }
+  }
+
+  /** The copy-on-write loop behind [[mergeCommit]] and the agg-view
+    * fold ([[IncrementalViews.refreshAgg]]). Under the `batchId` fence
+    * it probes which files of the latest snapshot the `pc` keys of
+    * `changes` can land in, hands those files' rows to `combine` (None
+    * when there is no table yet or no file is affected), writes what
+    * `combine` returns — the complete new rows of every key those
+    * files held or `changes` names — and publishes it next to the
+    * untouched files, carried by reference. A version collision
+    * re-derives against the new latest. `changes` is O(churn): its row
+    * count plus the affected files' rows bound the rewrite for the
+    * single-file layout choice. Returns the published version, or -2
+    * when `batchId` is already fenced. */
+  private[sources] def rewriteAffected(spark: SparkSession, dir: String,
+                                       changes: DataFrame, pc: String,
+                                       batchId: Long = -1L,
+                                       bloomCols: Seq[String] = Nil,
+                                       bloomFpp: Double = 0.01,
+                                       extraStatsCols: Seq[String] = Nil,
+                                       clusterBy: Option[String] = None)
+                                      (combine: Option[DataFrame] => DataFrame)
+      : Long = graft.Jobs.labeled(spark, "snap:merge") {
+    // the change batch is O(churn) by this loop's contract, and
     // its plan is executed THREE times below — the affected-key
     // distinct, the range partitioner's sample, and the final write —
     // so an unpersisted batch pays its (often expensive: a view
@@ -1086,26 +1138,9 @@ object Snapshots {
             else m.filter(!col("path").isin(aff.map(_._1): _*))
           (Some(keptEntries), aff)
       }
-      val base =
-        if (affected.nonEmpty)
-          spark.read.parquet(affected.map(_._1): _*)
-            .select(dataCols.map(col) :+ lit("u").as(opCol) :+
-              lit(Long.MinValue).as(seqCol): _*)
-        else changes.filter(lit(false))
-          .select(dataCols.map(col) :+ col(opCol) :+ col(seqCol): _*)
-      val merged = base
-        .unionByName(changes.select(
-          dataCols.map(col) :+ col(opCol) :+ col(seqCol): _*))
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(
-          struct((dataCols.filterNot(keyCols.contains).map(col) :+
-            col(opCol)).map(c => c): _*),
-          struct(col(seqCol), col(opCol))).as("__w"))
-        .select(keyCols.map(col) ++
-          dataCols.filterNot(keyCols.contains).map(c => col(s"__w.$c")) :+
-          col(s"__w.$opCol"): _*)
-        .filter(col(opCol) =!= "d")
-        .select(dataCols.map(col): _*)
+      val merged = combine(
+        if (affected.isEmpty) None
+        else Some(readFiles(spark, dir, latest.get, affected.map(_._1))))
       // clustered merge (same convention as compactCommit): the
       // grouped merge output is hash-scattered, so without reshaping
       // every rewritten file's pruneCol range spans the key space and
@@ -1172,7 +1207,6 @@ object Snapshots {
     }
     -1L // unreachable
     } finally if (ownPersist) changes.unpersist()
-    }
   }
 
   /** Predicate-level DELETE as file-granular copy-on-write — the
@@ -1233,11 +1267,11 @@ object Snapshots {
           m.filter(c).select("path").collect().map(_.getString(0)).toSeq
         }
       if (candidates.isEmpty) return latest
-      val touched = spark.read.parquet(candidates: _*)
+      val touched = readFiles(spark, dir, latest, candidates)
         .filter(cond).select(input_file_name().as("p"))
         .distinct().collect().map(_.getString(0)).toSeq
       if (touched.isEmpty) return latest
-      val base = spark.read.parquet(touched: _*)
+      val base = readFiles(spark, dir, latest, touched)
       val rewritten = assignments match {
         // delete exactly the TRUE rows: a NULL predicate result keeps
         // the row (plain !cond would delete it — three-valued logic)
@@ -1322,8 +1356,7 @@ object Snapshots {
   private def filesOf(spark: SparkSession, dir: String,
                       version: Option[Long]): Seq[String] =
     graft.Jobs.labeled(spark, "snap:files") {
-      val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-        throw new IllegalArgumentException(s"no snapshots at $dir"))
+      val v = resolve(spark, dir, version)
       manifestRows(spark, dir, v) match {
         case Some(cm) =>
           val i = cm.schema.fieldIndex("path")
@@ -1334,6 +1367,29 @@ object Snapshots {
       }
     }
 
+  /** Read data files listed by manifest `v`. When the manifest records
+    * ONE `file_schema` for every path, Spark gets it up front and skips
+    * the one-task footer-inference job each `spark.read.parquet` fires;
+    * mixed or legacy-null schemas, and manifests over the cache's size
+    * guard, keep inference. */
+  private def readFiles(spark: SparkSession, dir: String, v: Long,
+                        paths: Seq[String]): DataFrame = {
+    val recorded = manifestRows(spark, dir, v).flatMap { cm =>
+      val names = cm.schema.fieldNames
+      if (!names.contains("file_schema")) None
+      else {
+        val (pi, si) = (names.indexOf("path"), names.indexOf("file_schema"))
+        val want = paths.toSet
+        val hits = cm.rows.filter(r => want.contains(r.getString(pi)))
+        val schemas = hits.map(r => Option(r.getString(si))).distinct
+        if (hits.length != want.size || schemas.length != 1) None
+        else schemas.head.map(j => org.apache.spark.sql.types.DataType
+          .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType])
+      }
+    }
+    recorded.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+  }
+
   /** Read a snapshot (latest by default; pass a version for time
     * travel). Reads exactly the manifest's files — concurrent commits
     * are invisible. `mergeSchema = true` unions the file schemas
@@ -1342,21 +1398,21 @@ object Snapshots {
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None,
            mergeSchema: Boolean = false): DataFrame = {
-    val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
-            else spark.read
-    val files = filesOf(spark, dir, version)
-    if (files.nonEmpty) r.parquet(files: _*)
+    def at(v: Long, files: Seq[String]) =
+      if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(files: _*)
+      else readFiles(spark, dir, v, files)
+    val v = resolve(spark, dir, version)
+    val files = filesOf(spark, dir, Some(v))
+    if (files.nonEmpty) at(v, files)
     else {
       // an EMPTIED table (every row deleted) is a legitimate state:
       // its manifest lists no files, so the schema is borrowed from
       // the nearest earlier version that had data — only the empty
       // edge case pays this backward walk
-      val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-        throw new IllegalArgumentException(s"no snapshots at $dir"))
       val prior = Iterator.range(v - 1, -1L, -1L)
-        .map(pv => filesOf(spark, dir, Some(pv))).find(_.nonEmpty)
+        .map(pv => (pv, filesOf(spark, dir, Some(pv)))).find(_._2.nonEmpty)
       prior match {
-        case Some(fs0) => r.parquet(fs0: _*).limit(0)
+        case Some((pv, fs0)) => at(pv, fs0).limit(0)
         case None => throw new IllegalArgumentException(
           s"table at $dir has no data files in any version")
       }
@@ -1393,7 +1449,8 @@ object Snapshots {
   def readPrunedBy(spark: SparkSession, dir: String,
                    preds: Map[String, (Any, Any)],
                    version: Option[Long] = None): DataFrame = {
-    val m = manifest(spark, dir, version)
+    val v = resolve(spark, dir, version)
+    val m = manifest(spark, dir, Some(v))
     val cond = preds.map { case (c, (lo, hi)) =>
       val pair =
         if (c.isEmpty) Some((col("stats_min"), col("stats_max")))
@@ -1413,8 +1470,8 @@ object Snapshots {
     if (keep.isEmpty)
       // preserve the schema even when every file is pruned — via
       // read(), which also handles an EMPTIED table (zero files)
-      read(spark, dir, version).limit(0)
-    else spark.read.parquet(keep: _*)
+      read(spark, dir, Some(v)).limit(0)
+    else readFiles(spark, dir, v, keep)
   }
 
   /** Read only the files whose `column` stats range can intersect ANY
@@ -1431,7 +1488,8 @@ object Snapshots {
                        ranges: Seq[(Any, Any)],
                        version: Option[Long] = None): DataFrame = {
     require(ranges.nonEmpty, "readPrunedRanges needs at least one range")
-    val m = manifest(spark, dir, version)
+    val v = resolve(spark, dir, version)
+    val m = manifest(spark, dir, Some(v))
     val specs =
       if (column.isEmpty) Seq(("stats_min", "stats_max", ranges))
       else if (m.columns.contains(s"smin_$column"))
@@ -1440,8 +1498,8 @@ object Snapshots {
       // describe a DIFFERENT column — keep every file instead
       else Nil
     val keep = prunedPaths(m, specs)
-    if (keep.isEmpty) read(spark, dir, version).limit(0)
-    else spark.read.parquet(keep: _*)
+    if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
+    else readFiles(spark, dir, v, keep)
   }
 
   /** Above this many ranges for one column, an all-POINT range set is
@@ -1541,15 +1599,16 @@ object Snapshots {
                       version: Option[Long] = None): DataFrame = {
     require(specs.nonEmpty && specs.forall(_._2.nonEmpty),
       "readPrunedSpecs needs at least one range per spec")
-    val m = manifest(spark, dir, version)
+    val v = resolve(spark, dir, version)
+    val m = manifest(spark, dir, Some(v))
     val keep = graft.Jobs.labeled(spark, "snap:prune") {
       prunedPaths(m, specs.collect {
         case (column, ranges) if m.columns.contains(s"smin_$column") =>
           (s"smin_$column", s"smax_$column", ranges)
       })
     }
-    if (keep.isEmpty) read(spark, dir, version).limit(0)
-    else spark.read.parquet(keep: _*)
+    if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
+    else readFiles(spark, dir, v, keep)
   }
 
   /** Point-lookup file pruning: read only the files that might
@@ -1572,7 +1631,8 @@ object Snapshots {
   def readPoint(spark: SparkSession, dir: String, column: String, value: Any,
                 version: Option[Long] = None): DataFrame = {
     import graft.functions.{BloomMightContain, ColumnBridge}
-    val m = entryCols(manifest(spark, dir, version))
+    val v = resolve(spark, dir, version)
+    val m = entryCols(manifest(spark, dir, Some(v)))
     // ALL distinct recorded source types for this column, not one
     // arbitrary row's: under schema evolution (int→bigint) different
     // commits' blooms hashed different types, and a single-type probe
@@ -1599,8 +1659,8 @@ object Snapshots {
         ColumnBridge.expression(xxhash64(p))))).reduce(_ || _)
     val keep = m.filter(bloomPass)
       .select("path").collect().map(_.getString(0)).toSeq
-    if (keep.isEmpty) read(spark, dir, version).limit(0)
-    else spark.read.parquet(keep: _*)
+    if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
+    else readFiles(spark, dir, v, keep)
   }
 
   /** [[readPoint]] for a SET of values — the shape an index serve's
@@ -1621,7 +1681,8 @@ object Snapshots {
                  version: Option[Long] = None): DataFrame = {
     import graft.functions.{BloomMightContain, ColumnBridge}
     require(values.nonEmpty, "readPoints needs at least one value")
-    val m0 = entryCols(manifest(spark, dir, version))
+    val v = resolve(spark, dir, version)
+    val m0 = entryCols(manifest(spark, dir, Some(v)))
     val distinctVals = values.distinct
     // stats leg: point ranges against the recorded min/max pair
     val m1 =
@@ -1629,7 +1690,7 @@ object Snapshots {
       else {
         val keep = prunedPaths(m0, Seq((s"smin_$column", s"smax_$column",
           distinctVals.map(v => (v, v)))))
-        if (keep.isEmpty) return read(spark, dir, version).limit(0)
+        if (keep.isEmpty) return read(spark, dir, Some(v)).limit(0)
         // large lists plan as an InSet, never an Or-chain
         m0.filter(col("path").isin(keep: _*))
       }
@@ -1653,8 +1714,8 @@ object Snapshots {
               ColumnBridge.expression(h)))))
       }
     val keep = m2.select("path").collect().map(_.getString(0)).toSeq
-    if (keep.isEmpty) read(spark, dir, version).limit(0)
-    else spark.read.parquet(keep: _*)
+    if (keep.isEmpty) read(spark, dir, Some(v)).limit(0)
+    else readFiles(spark, dir, v, keep)
   }
 
   /** The table's commit history, one row per live (unexpired)
@@ -1727,8 +1788,7 @@ object Snapshots {
     * be widened. */
   def tableSchema(spark: SparkSession, dir: String,
                   version: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $dir"))
+    val v = resolve(spark, dir, version)
     val js = manifestRows(spark, dir, v) match {
       case Some(cm) =>
         if (!cm.schema.fieldNames.contains("file_schema")) return None
@@ -1833,10 +1893,10 @@ object Snapshots {
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
       case None => read(spark, dir, Some(toVersion), mergeSchema = true).limit(0)
     }
-    def side(files: Seq[String]): DataFrame =
+    def side(v: Long, files: Seq[String]): DataFrame =
       if (files.isEmpty) template
       else {
-        val df = spark.read.parquet(files: _*)
+        val df = readFiles(spark, dir, v, files)
         // align EVERY column to the template's type, not just add the
         // missing ones: under a type-widening schema evolution
         // (int→bigint) the churned files straddle both types, and the
@@ -1849,8 +1909,8 @@ object Snapshots {
           else d
         }.select(template.columns.map(col): _*)
       }
-    val a = side(added)
-    val r = side(removed)
+    val a = side(toVersion, added)
+    val r = side(fromVersion, removed)
     // fold the empty-side cases EXPLICITLY: exceptAll against nothing
     // is the identity, so an append-only tick's feed is a bare scan of
     // the added files and a pure-delete tick a bare scan of the removed

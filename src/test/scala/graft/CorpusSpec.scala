@@ -463,6 +463,18 @@ class CorpusSpec extends SparkSpec {
     assert(chain.contains("NULL source"))
   }
 
+  test("vocabDivergenceBy: past the domain cap it fails by name before any join") {
+    val s = spark; import s.implicits._
+    val cap = Corpus.MaxDivergenceDomains
+    val e = intercept[IllegalArgumentException] {
+      Corpus.vocabDivergenceBy(
+        spark.range(cap + 1).select(col("id").as("d"),
+          lit("t").as("token"), lit(1L).as("cnt")),
+        "d", Seq(("t", 1L)).toDF("token", "cnt"))
+    }
+    assert(e.getMessage.contains(s"more than $cap distinct d values"))
+  }
+
   test("zipfFitFromCounts: bucketed two-level ranking is tie-invariant and keeps windows bounded") {
     val s = spark; import s.implicits._
     // heavy ties: 200 tokens over 5 frequency classes — the rank

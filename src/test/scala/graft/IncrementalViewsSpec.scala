@@ -171,6 +171,10 @@ class IncrementalViewsSpec extends SparkSpec {
         count(lit(1)).as("__cnt"),
         min(col("x")).as("min_x"), max(col("x")).as("max_x"))
 
+  /** Spark jobs of the job-count guard's fixed min/max tick with
+    * deletes, as measured for the single-aggregation fold. */
+  private val FoldJobs = 10
+
   private def assertAggCurrent(srcDir: String, viewDir: String): Unit =
     assert(canon(Snapshots.read(spark, viewDir)
         .select("g", "sum_x", "__cnt", "min_x", "max_x")) ==
@@ -178,35 +182,76 @@ class IncrementalViewsSpec extends SparkSpec {
 
   test("agg view: sums/counts fold from the feed alone; min/max recompute per affected group") {
     val s = spark; import s.implicits._
+    // the fold must equal a from-scratch aggregation on both affected-
+    // file probe paths (≤64 distinct head keys probe driver-side, more
+    // take the distributed key↔stats join) and both write shapes (one
+    // sorted file, or the range-partitioned rewrite)
+    for (wide <- Seq(false, true); singleFile <- Seq(true, false)) {
+      val (src, v) = (tmpDir(), tmpDir())
+      // 100 extra groups, each touched by the tick: the wide probe
+      val w = if (wide) (0 until 100).map(i => (f"w$i%03d", 100.0 + i)) else Nil
+      if (!singleFile) spark.conf.set("spark.graft.merge.singleFileMaxRows", "0")
+      try {
+        Snapshots.commit((Seq(("a", 1.5), ("a", 2.25), ("b", 10.0), (null, 7.0),
+            ("d", 4.0), ("d", 5.0)) ++ w).toDF("g", "x"), src,
+          statsCol = Some("g"))
+        val done = IncrementalViews.refreshAgg(spark, src, v,
+          Seq("g"), Seq("x"), minMaxCols = Seq("x"))
+        assert(done == Seq(0L))
+        assertAggCurrent(src, v)
+
+        // three source versions land before one refresh call: an
+        // append (into the NULL group too), a keyed delete (shrinks
+        // group a, erases group b, only deletes from group d), and an
+        // update that moves rows BETWEEN groups — one call folds all
+        Snapshots.commit((Seq(("a", 0.25), ("c", 3.0), (null, -1.0)) ++
+            w.map { case (g, x) => (g, x + 0.5) }).toDF("g", "x"), src,
+          statsCol = Some("g"))
+        Snapshots.deleteWhere(spark, src,
+          col("x") === 10.0 || col("x") === 2.25 || col("x") === 5.0)
+        Snapshots.updateWhere(spark, src, col("x") === 3.0 || col("x") === 1.5,
+          Map("g" -> when(col("x") === 3.0, lit("a")).otherwise(lit("e"))))
+        assert(IncrementalViews.refreshAgg(spark, src, v,
+          Seq("g"), Seq("x"), minMaxCols = Seq("x")) == Seq(1L, 2L, 3L))
+        assertAggCurrent(src, v)
+        // group b's count hit zero: it must have LEFT the view
+        assert(Snapshots.read(spark, v).filter(col("g") === "b").count() == 0L)
+        // the NULL group aggregates like SQL GROUP BY
+        assert(Snapshots.read(spark, v).filter(col("g").isNull)
+          .select("__cnt").as[Long].collect().toSeq == Seq(2L))
+        // only-deleted-from group d: max rescanned down to 4.0
+        assert(Snapshots.read(spark, v).filter(col("g") === "d")
+          .select("max_x").as[Double].collect().toSeq == Seq(4.0))
+
+        // nothing new: no versions folded, view untouched
+        val vv = Snapshots.latestVersion(spark, v)
+        assert(IncrementalViews.refreshAgg(spark, src, v,
+          Seq("g"), Seq("x"), minMaxCols = Seq("x")).isEmpty)
+        assert(Snapshots.latestVersion(spark, v) == vv)
+      } finally spark.conf.unset("spark.graft.merge.singleFileMaxRows")
+    }
+  }
+
+  test("agg view: a min/max tick with deletes stays within the single fold's job count") {
+    val s = spark; import s.implicits._
     val (src, v) = (tmpDir(), tmpDir())
-    Snapshots.commit(Seq(("a", 1.5), ("a", 2.25), ("b", 10.0), (null, 7.0))
+    Snapshots.commit(Seq(("a", 1.0), ("a", 2.0), ("b", 3.0), ("c", 6.0))
       .toDF("g", "x"), src, statsCol = Some("g"))
-    val done = IncrementalViews.refreshAgg(spark, src, v,
-      Seq("g"), Seq("x"), minMaxCols = Seq("x"))
-    assert(done == Seq(0L))
-    assertAggCurrent(src, v)
-
-    // three source versions land before one refresh call: an append,
-    // a keyed delete (shrinks group a and erases group b), and an
-    // update that moves a row BETWEEN groups — one call folds all
-    Snapshots.commit(Seq(("a", 0.25), ("c", 3.0)).toDF("g", "x"), src,
+    IncrementalViews.refreshAgg(spark, src, v, Seq("g"), Seq("x"),
+      minMaxCols = Seq("x"))
+    Snapshots.commit(Seq(("b", 4.0), ("d", 5.0)).toDF("g", "x"), src,
       statsCol = Some("g"))
-    Snapshots.deleteWhere(spark, src, col("x") === 10.0 || col("x") === 2.25)
-    Snapshots.updateWhere(spark, src, col("x") === 3.0,
-      Map("g" -> lit("a")))
-    assert(IncrementalViews.refreshAgg(spark, src, v,
-      Seq("g"), Seq("x"), minMaxCols = Seq("x")) == Seq(1L, 2L, 3L))
+    Snapshots.deleteWhere(spark, src, col("x") === 2.0 || col("x") === 6.0)
+    val jobs = jobsOf {
+      IncrementalViews.refreshAgg(spark, src, v, Seq("g"), Seq("x"),
+        minMaxCols = Seq("x"))
+    }
     assertAggCurrent(src, v)
-    // group b's count hit zero: it must have LEFT the view
-    assert(Snapshots.read(spark, v).filter(col("g") === "b").count() == 0L)
-    // the NULL group aggregates like SQL GROUP BY
-    assert(Snapshots.read(spark, v).filter(col("g").isNull).count() == 1L)
-
-    // nothing new: no versions folded, view untouched
-    val vv = Snapshots.latestVersion(spark, v)
-    assert(IncrementalViews.refreshAgg(spark, src, v,
-      Seq("g"), Seq("x"), minMaxCols = Seq("x")).isEmpty)
-    assert(Snapshots.latestVersion(spark, v) == vv)
+    // the fold as built: feed + delta, affected-file probe, delete-key
+    // specs, rescan and view rows folded in one aggregation, one write.
+    // A fold split back into separate view read, join and merge passes
+    // runs more jobs than this and fails here.
+    assert(jobs <= FoldJobs, s"one refreshAgg tick ran $jobs Spark jobs")
   }
 
   test("agg view: interrupted fold replays exactly once (marker gone, merge fenced)") {

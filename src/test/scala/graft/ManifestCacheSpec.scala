@@ -58,8 +58,41 @@ class ManifestCacheSpec extends SparkSpec {
     Snapshots.commit(batch, dir)
     assert(Snapshots.lastCommittedBatch(spark, dir) == 7L)
     // recorded schema matches what the files actually read back as
+    def inferred(d: String) = spark.read.parquet(Snapshots.manifest(spark, d)
+      .select("path").collect().map(_.getString(0)).toSeq: _*).schema
     val ts = Snapshots.tableSchema(spark, dir).get
-    assert(ts == Snapshots.read(spark, dir).schema)
+    assert(ts == inferred(dir))
+    // a read hands Spark that recorded schema: equal to inference,
+    // without inference's footer job
+    var carried: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { carried = Snapshots.read(spark, dir) } == 0)
+    assert(carried.schema == inferred(dir))
+    // a table whose files recorded different schemas (an int and a
+    // bigint generation) keeps inference — and its footer job
+    val s = spark
+    import s.implicits._
+    val mixed = tmpDir()
+    Snapshots.commit(Seq(Tuple1(1)).toDF("id"), mixed)
+    Snapshots.commit(Seq(Tuple1(2L)).toDF("id"), mixed)
+    var fallback: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { fallback = Snapshots.read(spark, mixed) } >= 1)
+    assert(fallback.schema == inferred(mixed))
+  }
+
+  test("footer stats bail to the scan when parquet truncates binary stats") {
+    val s = spark
+    import s.implicits._
+    val key = "parquet.statistics.truncate.length"
+    val hc = spark.sparkContext.hadoopConfiguration
+    val dir = tmpDir()
+    // truncated footer stats would read "ap" / "zv" (a surrogate upper
+    // bound): the manifest must still record the exact values
+    hc.set(key, "2")
+    try Snapshots.commit(Seq("apple-pie", "zucchini-bread").toDF("s")
+        .coalesce(1), dir, statsCol = Some("s"))
+    finally hc.unset(key)
+    val m = Snapshots.manifest(spark, dir).select("smin_s", "smax_s").head()
+    assert((m.getString(0), m.getString(1)) == (("apple-pie", "zucchini-bread")))
   }
 
   test("a table recreated at the same path is NOT served from the old " +
