@@ -128,6 +128,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in rewrite of the row_number-then-filter idiom onto that
     // plan (spark.graft.autoTopK=true)
     ext.injectOptimizerRule(_ => graft.plans.AutoTopKRule)
+    // streaming: the micro-batch clock reaches generated code by
+    // reference, so a batch's stamp no longer recompiles its stage
+    ext.injectOptimizerRule(_ => graft.functions.BatchClockRule)
 
     def info(name: String, usage: String) =
       new ExpressionInfo("graft", null, name, usage, "")

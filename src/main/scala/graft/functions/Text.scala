@@ -17,8 +17,6 @@ object Text {
   /** Whitespace tokens. Mirror: `string_split(text, ' ')`. */
   def tokens(text: Column): Column = split(text, " ")
 
-  def distinctTokens(text: Column): Column = array_distinct(tokens(text))
-
   // ---- language ID ----------------------------------------------------
 
   /** Tiny per-language stopword marker sets (public common-word lists).
@@ -98,10 +96,6 @@ object Text {
     when(size(s) < n, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(1), size(s) - (n - 1)),
         i => concat_ws(" ", slice(s, i, lit(n)))))
-
-  /** Convenience form over raw text — one-off use only (inline
-    * capture; hot paths materialize the token array first). */
-  def ngrams(text: Column, n: Int): Column = ngramsFromTokens(tokens(text), n)
 
   /** Token hash array — hash strings ONCE, count on longs. Callers of
     * the FromHashes variants below must materialize this in its OWN

@@ -1721,17 +1721,6 @@ object Similarity {
     books
   }
 
-  /** The stored `(dim, m, kCodes)` contract of a PQ index — written
-    * by [[pqWriteIndex]], REQUIRED by every read/append path so a
-    * query or batch whose vector dimension disagrees with the index
-    * fails by name instead of null-padding through `zip_with` into a
-    * NULL ADC distance that sorts FIRST (silent garbage top-k). */
-  def pqReadMeta(spark: org.apache.spark.sql.SparkSession,
-                 path: String): (Int, Int, Int) = {
-    val (dim, m, kCodes, _) = pqMetaFields(spark, path)
-    (dim, m, kCodes)
-  }
-
   /** Fail-loud check that the stored books match the stored meta —
     * a mixed-artifact or hand-edited index dies here, not in an ADC
     * scan. */

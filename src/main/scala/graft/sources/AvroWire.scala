@@ -17,9 +17,10 @@ import java.nio.ByteBuffer
   * 4-byte big-endian schema id, then the Avro binary body.
   *
   * Column-level helpers are pure expressions (codegen); the Avro body
-  * codec is a per-partition `mapPartitions` with one reusable
-  * reader/decoder per partition — the executor-side shape a real
-  * deserializer runs as, no driver involvement, no per-row setup.
+  * codec is a per-partition `mapPartitions` with one codec and one
+  * reusable decoder per partition that reads each body in place — the
+  * executor-side shape a real deserializer runs as, no driver
+  * involvement, no per-row setup or copy.
   */
 object AvroWire {
 
@@ -32,13 +33,8 @@ object AvroWire {
     ByteBuffer.allocate(HeaderLen + body.length)
       .put(MagicByte).putInt(schemaId).put(body).array()
 
-  /** (schemaId, body); rejects messages without the wire header —
-    * the monitor's format detection, LatencyMonitor.scala:141-150. */
-  def unframe(msg: Array[Byte]): Option[(Int, Array[Byte])] =
-    if (!hasWireHeader(msg)) None
-    else Some((ByteBuffer.wrap(msg, 1, 4).getInt,
-      java.util.Arrays.copyOfRange(msg, HeaderLen, msg.length)))
-
+  /** The monitor's format detection, LatencyMonitor.scala:141-150:
+    * messages without the wire header are rejected. */
   def hasWireHeader(msg: Array[Byte]): Boolean =
     msg != null && msg.length > HeaderLen && msg(0) == MagicByte
 
@@ -47,13 +43,6 @@ object AvroWire {
   /** Big-endian schema id from bytes 2..5 of the wire message. */
   def schemaIdCol(value: Column): Column =
     conv(hex(substring(value, 2, 4)), 16, 10).cast("int")
-
-  /** Avro body (bytes after the 5-byte header). */
-  def bodyCol(value: Column): Column =
-    value.substr(lit(HeaderLen + 1), length(value) - HeaderLen)
-
-  def hasHeaderCol(value: Column): Column =
-    length(value) > HeaderLen && substring(value, 1, 1) === lit(Array(MagicByte))
 
   // ---- schema-bound codec ----
 
@@ -75,8 +64,9 @@ object AvroWire {
 
     def newRecord(): GenericRecord = new GenericData.Record(schema)
 
-    def decode(body: Array[Byte], reuse: BinaryDecoder = null): GenericRecord =
-      reader.read(null, DecoderFactory.get.binaryDecoder(body, reuse))
+    /** The next record from `dec`, refilling `reuse` when given. */
+    def read(dec: BinaryDecoder, reuse: GenericRecord): GenericRecord =
+      reader.read(reuse, dec)
 
     def encode(rec: GenericRecord): Array[Byte] = {
       val out = new ByteArrayOutputStream()
@@ -84,6 +74,27 @@ object AvroWire {
       writer.write(rec, enc)
       enc.flush()
       out.toByteArray
+    }
+  }
+
+  /** Framed messages of one partition → weather readings: unframed
+    * ones and those whose schema id `codecOf` maps to no codec are
+    * dropped; one decoder and one record are reused for the partition. */
+  private def decodePartition(it: Iterator[Array[Byte]],
+      codecOf: Int => Option[Codec]): Iterator[WeatherReading] = {
+    var dec: BinaryDecoder = null
+    var rec: GenericRecord = null
+    it.flatMap { msg =>
+      if (!hasWireHeader(msg)) None
+      else codecOf(ByteBuffer.wrap(msg, 1, 4).getInt).map { codec =>
+        // the body in place, after the header: no copy
+        dec = DecoderFactory.get.binaryDecoder(msg, HeaderLen, msg.length - HeaderLen, dec)
+        rec = codec.read(dec, rec)
+        WeatherReading(
+          rec.get("station_id").toString, rec.get("station_name").toString,
+          rec.get("metric").toString, rec.get("value").asInstanceOf[Double],
+          rec.get("producer_ts").asInstanceOf[Long])
+      }
     }
   }
 
@@ -143,19 +154,9 @@ object AvroWire {
     val bc = spark.sparkContext.broadcast(resolver)
     val readerJson = weatherSchemaJson
     df.select(col(valueCol)).as[Array[Byte]].mapPartitions { it =>
-      val codecs = scala.collection.mutable.Map.empty[Int, Codec]
-      it.flatMap { bytes =>
-        unframe(bytes).flatMap { case (id, body) =>
-          bc.value.get(id).map { writerJson =>
-            val codec = codecs.getOrElseUpdate(id, new Codec(writerJson, readerJson))
-            val r = codec.decode(body)
-            WeatherReading(
-              r.get("station_id").toString, r.get("station_name").toString,
-              r.get("metric").toString, r.get("value").asInstanceOf[Double],
-              r.get("producer_ts").asInstanceOf[Long])
-          }
-        }
-      }
+      val codecs = scala.collection.mutable.Map.empty[Int, Option[Codec]]
+      decodePartition(it, id =>
+        codecs.getOrElseUpdate(id, bc.value.get(id).map(new Codec(_, readerJson))))
     }
   }
 
@@ -166,16 +167,8 @@ object AvroWire {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(valueCol)).as[Array[Byte]].mapPartitions { it =>
-      val codec = new Codec(weatherSchemaJson)
-      it.flatMap { bytes =>
-        unframe(bytes).map { case (_, body) =>
-          val r = codec.decode(body)
-          WeatherReading(
-            r.get("station_id").toString, r.get("station_name").toString,
-            r.get("metric").toString, r.get("value").asInstanceOf[Double],
-            r.get("producer_ts").asInstanceOf[Long])
-        }
-      }
+      val codec = Some(new Codec(weatherSchemaJson))
+      decodePartition(it, _ => codec)
     }
   }
 }

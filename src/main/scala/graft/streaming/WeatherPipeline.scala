@@ -22,6 +22,16 @@ import graft.operators.Windows
   * shuffle; the watermark bounds state size (windows older than the
   * watermark are evicted), so state is O(active windows × keys) —
   * independent of stream length.
+  *
+  * `processing_end_ts` is the micro-batch timestamp, in epoch ms: the
+  * reference stamps `current_timestamp()` just before the sink
+  * (SparkWeatherConsumer.scala:270), and in a streaming query Spark
+  * fixes that clock once per micro-batch, so every row of a batch
+  * carries the same stamp. In a graft session the stamp reaches the
+  * generated code of the final aggregation stage by reference
+  * ([[graft.functions.BatchClock]]), not as an inlined literal: the
+  * stage's source is the same in every batch and compiles once for the
+  * life of the query, instead of twice per batch (driver, then tasks).
   */
 object WeatherPipeline {
 
@@ -41,7 +51,7 @@ object WeatherPipeline {
       else unioned
     Windows.tumblingAgg(marked, tsCol, keys, valueCol, ordCol, windowSize)
       // the reference stamps processing end time just before the sink
-      // (SparkWeatherConsumer.scala:270)
+      // (SparkWeatherConsumer.scala:270); the batch's clock, see above
       .withColumn("processing_end_ts", unix_millis(current_timestamp()))
   }
 

@@ -17,9 +17,18 @@ class AvroWireSpec extends SparkSpec {
     assert(framed.length == 9 && framed(0) == 0)
     assert(AvroWire.hasWireHeader(framed))
     assert(!AvroWire.hasWireHeader(body))
-    val Some((id, b)) = AvroWire.unframe(framed)
-    assert(id == 42 && b.sameElements(body))
-    assert(AvroWire.unframe(Array[Byte](9, 9)).isEmpty)
+    assert(!AvroWire.hasWireHeader(Array[Byte](9, 9)))
+    assert(framed.drop(AvroWire.HeaderLen).sameElements(body))
+    // decode unframes in place: the embedded id picks the writer
+    // schema (43 is unknown here, so its different record is dropped)
+    // and the body is read from after the header
+    val s = spark
+    import s.implicits._
+    val msgs = AvroWire.encodeWeather(readings.take(1).toDS, 42)
+      .union(AvroWire.encodeWeather(readings.slice(1, 2).toDS, 43))
+      .select("value").union(Seq(Array[Byte](9, 9)).toDF("value"))
+    val decoded = AvroWire.decodeWeatherDynamic(msgs, Map(42 -> AvroWire.weatherSchemaJson))
+    assert(decoded.collect().toSeq == readings.take(1))
   }
 
   test("distributed encode → wire columns → decode roundtrip") {
