@@ -31,6 +31,18 @@ import org.apache.spark.sql.SparkSession
   * known constant, whatever the key cardinality does. 512 MB is the
   * local[32] default; on a real cluster set it alongside
   * `spark.executor.memoryOverhead` (overhead must exceed the cap).
+  *
+  * The `file:` FileContext is graft's own
+  * (`graft.sources.ForkFreeLocalFs`). Spark writes every streaming
+  * checkpoint file through FileContext: offset and commit logs,
+  * RocksDB changelogs and their `.crc` twins. Hadoop's stock local
+  * implementation, without the native `libhadoop`, forks a `chmod`
+  * process per create or mkdir and a `readlink` per rename operand:
+  * about 50 forks per weather micro-batch, which the state commit and
+  * the offset- and commit-log writes wait on. Graft's does both calls
+  * in the JVM and still writes the `.crc` files. The `FileSystem` API
+  * (`fs.file.impl`, behind snapshots and parquet writes) stays
+  * Hadoop's.
   */
 object GraftSession {
   def local(cores: Int = 32): SparkSession = tuned(
@@ -81,6 +93,9 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
       .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "512")
       .config("spark.sql.session.timeZone", "UTC")
+      // fork-free checkpoint writes; see the class doc
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

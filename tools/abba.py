@@ -18,8 +18,12 @@ median and quartiles, the pairs the change wins (ties count for
 neither), whether a gain holds by the rule "wins at least 9/10 of the
 pairs and the medians differ, in the better direction, by more than the
 parent's quartile distance", and whether the change's median is within
-the metric's regression bound. --out keeps every result line as
-`pair, seed, order, side, json` rows.
+the metric's regression bound. Each run's window probe,
+`health.cal_spark_ms_post` (a fixed Spark job timed after the run, read
+from the tree's `.bench_build/results/<workload>-<seed>-trace0.json`),
+is printed on its pair's line, so a pair run in a slow window shows.
+--out keeps every result line as `pair, seed, order, side, probe, json`
+rows.
 """
 import argparse
 import json
@@ -50,7 +54,8 @@ def export(ref, dest):
 
 
 def run(tree, workload, seed, seconds):
-    """The result line of one benchmark run, or None when it failed."""
+    """The result line of one benchmark run (None when it failed) and
+    its post-run window probe in ms (None when there is no record)."""
     p = subprocess.run(
         [sys.executable, "graftbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -58,8 +63,17 @@ def run(tree, workload, seed, seconds):
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
+        return None, None
+    return json.loads(lines[-1]), probe(tree, workload, seed)
+
+
+def probe(tree, workload, seed):
+    art = os.path.join(tree, ".bench_build", "results", f"{workload}-{seed}-trace0.json")
+    try:
+        with open(art) as f:
+            return json.load(f)["metrics"]["health.cal_spark_ms_post"]["value"]
+    except (OSError, KeyError, ValueError):
         return None
-    return json.loads(lines[-1])
 
 
 def quartiles(xs):
@@ -107,16 +121,16 @@ def main():
             order = [("parent", parent), ("change", ROOT)]
             if i % 2:
                 order.reverse()
-            got = {}
+            got, cal = {}, {}
             for side, tree in order:
-                got[side] = run(tree, args.workload, seed, seconds)
+                got[side], cal[side] = run(tree, args.workload, seed, seconds)
                 if out:
                     out.write(f"{i}\t{seed}\t{order[0][0][0].upper()}-{order[1][0][0].upper()}"
-                              f"\t{side}\t{json.dumps(got[side])}\n")
+                              f"\t{side}\t{cal[side]}\t{json.dumps(got[side])}\n")
                     out.flush()
             print(f"pair {i} seed {seed}: " + "  ".join(
                 f"{s} {'ok' if got[s] and got[s]['correct'] else 'FAILED'}"
-                for s, _ in order), flush=True)
+                f" (cal_spark_ms_post {cal[s]})" for s, _ in order), flush=True)
             if got["parent"] and got["change"]:
                 results.append((got["parent"], got["change"]))
     finally:
