@@ -43,6 +43,30 @@ import org.apache.spark.sql.SparkSession
   * in the JVM and still writes the `.crc` files. The `FileSystem` API
   * (`fs.file.impl`, behind snapshots and parquet writes) stays
   * Hadoop's.
+  *
+  * Session artifact isolation is off. Graft adds no session artifacts
+  * (jars, files, REPL classes), but with isolation on Spark 4.1 runs
+  * every task under a per-session `ExecutorClassLoader`: each type name
+  * janino cannot resolve locally while compiling a task-side class is
+  * fetched from the driver over RPC, inside the compile lock (2,931
+  * failed fetches in one traced `view_ticks` run), and because the
+  * codegen cache is keyed by class loader, tasks compile again every
+  * source the driver just compiled (161 of that run's 410 compiles
+  * repeated an earlier source).
+  * With isolation off, tasks use the executor's own loader and share
+  * the driver's cache entries.
+  *
+  * Maintained-view ticks whose bound on the rows they read is below
+  * `graft.sources.TickBudget.Rows` (500k) run interpreted, on a clone
+  * of the session with `spark.sql.codegen.factoryMode=NO_CODEGEN`. An
+  * O(churn) tick then compiles no whole-stage class (with generated
+  * code, a traced `view_ticks` run spent 9.5 s of janino time, summed
+  * over threads, in its timed 22.5 s). The budget is the measured crossover of an
+  * agg-view tick (sum, min, max with deletes) against generated code
+  * whose classes were already compiled: interpreted is 10–30% faster
+  * at 300k source rows and 15–35% slower at 1M
+  * (`plans/tick_budget/crossover.txt`). Larger ticks keep whole-stage
+  * code generation.
   */
 object GraftSession {
   def local(cores: Int = 32): SparkSession = tuned(
@@ -96,6 +120,8 @@ object GraftSession {
       // fork-free checkpoint writes; see the class doc
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.sources.ForkFreeLocalFs].getName)
+      // tasks run under the executor's own class loader; see the class doc
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,7 +6,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -38,11 +38,17 @@ class ForkFreeLocalFileSystem extends RawLocalFileSystem {
   * (`fs.AbstractFileSystem.file.impl`): Hadoop's `LocalFs` — checksums
   * over the raw local file system — with `ForkFreeLocalFileSystem`
   * underneath. The overrides are those of Hadoop's `RawLocalFs`, whose
-  * constructors are package-private. */
+  * constructors are package-private. The one-argument `open`, which
+  * Spark's checkpoint file manager calls, is checksummed like the
+  * two-argument one: Hadoop's `FilterFs` would hand it to the raw file
+  * system, past the checker. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new DelegateToFileSystem(uri, new ForkFreeLocalFileSystem, conf, "file", false) {
       override def getUriDefaultPort: Int = -1
       override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults
       override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
       override def isValidName(src: String): Boolean = true
-    })
+    }) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

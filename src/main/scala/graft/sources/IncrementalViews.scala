@@ -542,11 +542,19 @@ object IncrementalViews {
   /** The one-input pinned-tick protocol shared by every single-source
     * view ([[refreshAgg]], [[refreshTopK]]): resolve or replay ONE
     * intent covering every pending source version, hand `work` the
-    * pinned (from, to] delta, then publish the processed watermark and
-    * GC spent markers. Returns the versions the tick folded. */
+    * session the tick runs on and the pinned (from, to] delta, then
+    * publish the processed watermark and GC spent markers. Returns the
+    * versions the tick folded.
+    *
+    * The tick runs interpreted ([[TickBudget]]) when the rows it can
+    * read fit the budget: the files the delta reads, the whole view
+    * (an upper bound on the affected view files) and, for a `work`
+    * that `rereadsSource`, the whole source as of the tick. */
   private def withSourceTick(spark: SparkSession, srcDir: String,
-                             viewDir: String, stateName: String)
-                            (work: (DataFrame, AggTick) => Unit): Seq[Long] =
+                             viewDir: String, stateName: String,
+                             rereadsSource: Boolean)
+                            (work: (SparkSession, DataFrame, AggTick) => Unit)
+      : Seq[Long] =
     // same single-maintainer lock (and rationale) as [[refreshJoin]]
     graft.operators.IndexMaintenance.withWriterLock(spark, viewDir,
       s"refresh($stateName)") {
@@ -568,13 +576,26 @@ object IncrementalViews {
         t
     }
 
-    // ONE delta covering every pending version, pinned for replay
-    val changes =
-      if (tick.from < 0L)
-        Snapshots.read(spark, srcDir, Some(tick.to))
-          .withColumn("__change", lit("insert"))
-      else Snapshots.diff(spark, srcDir, tick.from, tick.to)
-    work(changes, tick)
+    val to = Snapshots.cachedFileRows(spark, srcDir, tick.to)
+    val feedRows =
+      if (tick.from < 0L) to.map(_.values.sum)
+      else for (a <- to; b <- Snapshots.cachedFileRows(spark, srcDir, tick.from))
+        yield a.collect { case (p, n) if !b.contains(p) => n }.sum +
+          b.collect { case (p, n) if !a.contains(p) => n }.sum
+    val bound = for {
+      feed <- feedRows
+      view <- Snapshots.cachedLatestRows(spark, viewDir)
+      src <- if (rereadsSource) to.map(_.values.sum) else Some(0L)
+    } yield feed + view + src
+    TickBudget(spark, bound) { spark =>
+      // ONE delta covering every pending version, pinned for replay
+      val changes =
+        if (tick.from < 0L)
+          Snapshots.read(spark, srcDir, Some(tick.to))
+            .withColumn("__change", lit("insert"))
+        else Snapshots.diff(spark, srcDir, tick.from, tick.to)
+      work(spark, changes, tick)
+    }
 
     writeAggMarker(f, root, tick.copy(kind = "processed"))
     // spent markers: intents at or below the watermark, older processed
@@ -649,7 +670,8 @@ object IncrementalViews {
                  where: Option[Column] = None,
                  transform: Option[DataFrame => DataFrame] = None): Seq[Long] = {
     require(groupKeys.nonEmpty, "refreshAgg needs at least one group key")
-    withSourceTick(spark, srcDir, viewDir, "_agg_state") { (changes, tick) =>
+    withSourceTick(spark, srcDir, viewDir, "_agg_state",
+        rereadsSource = minMaxCols.nonEmpty) { (spark, changes, tick) =>
       applyAggDelta(spark, srcDir, viewDir, groupKeys, sumCols, sumScale,
         minMaxCols, where, transform, changes, tick.to)
     }
@@ -790,7 +812,8 @@ object IncrementalViews {
                   ascending: Boolean = false): Seq[Long] = {
     require(partitionKeys.nonEmpty, "refreshTopK needs at least one key")
     require(k > 0, s"k must be positive: $k")
-    withSourceTick(spark, srcDir, viewDir, "_topk_state") { (changes, tick) =>
+    withSourceTick(spark, srcDir, viewDir, "_topk_state",
+        rereadsSource = true) { (spark, changes, tick) =>
       val keyCols = partitionKeys.map(col)
       val affected = changes.select(keyCols: _*).distinct().persist()
       try {
@@ -858,7 +881,8 @@ object IncrementalViews {
                     keyCols: Seq[String], rowOrder: Seq[String],
                     derive: DataFrame => DataFrame): Seq[Long] = {
     require(keyCols.nonEmpty, "refreshPerKey needs at least one key")
-    withSourceTick(spark, srcDir, viewDir, "_derived_state") { (changes, tick) =>
+    withSourceTick(spark, srcDir, viewDir, "_derived_state",
+        rereadsSource = true) { (spark, changes, tick) =>
       val kCols = keyCols.map(col)
       val affected = changes.select(kCols: _*).distinct().persist()
       try {
@@ -2355,6 +2379,14 @@ object IncrementalViews {
     require(Snapshots.latestVersion(spark, s"$viewRoot/posd").isDefined,
       s"$viewRoot/posd is missing — search needs a positional = true " +
         "index (snippets come from the doc-major positional twin)")
+    // the serve runs interpreted ([[TickBudget]]) when the views it
+    // reads fit the budget; the page it returns then belongs to that
+    // session too, so the caller's action on it compiles nothing
+    val bound = (Seq("post", "pos", "posd", "gstat", "nullc")
+        .map(v => s"$viewRoot/$v") ++ spellIndex)
+      .map(Snapshots.cachedLatestRows(spark, _))
+      .foldLeft(Option(0L))((a, b) => for (x <- a; y <- b) yield x + y)
+    TickBudget(spark, bound) { spark =>
     // "did you mean": with a spell index attached, any query term
     // with ZERO live postings (one pruned probe of just those terms'
     // posting files — the term either opens its file or it doesn't)
@@ -2382,8 +2414,9 @@ object IncrementalViews {
     val hits = top.collect()
     val idType = top.schema(idCol).dataType
     if (hits.isEmpty)
-      return withAudit(top.limit(0).select(col(idCol), lit(0L).as("rank"),
+      withAudit(top.limit(0).select(col(idCol), lit(0L).as("rank"),
         col("bm25"), lit(0L).as("center_pos"), concat_ws(" ").as("snippet")))
+    else {
     val scores = spark.createDataFrame(
       java.util.Arrays.asList(hits.zipWithIndex.map { case (r, i) =>
         org.apache.spark.sql.Row(r.get(0), (i + 1).toLong, r.getDouble(1))
@@ -2421,6 +2454,8 @@ object IncrementalViews {
     withAudit(broadcast(scores).join(snip, Seq("__doc"))
       .select(col("__doc").as(idCol), col("rank"), col("bm25"),
         col("__center").cast("long").as("center_pos"), col("snippet")))
+    }
+    }
   }
 
   /** HYBRID retrieval: one query, two maintained indexes, one fused

@@ -105,9 +105,32 @@ object Snapshots {
     * cost more than the optimizations this gates save). */
   private[sources] def cachedFileCount(spark: SparkSession,
                                        dir: String): Option[Int] =
-    latestVersion(spark, dir).flatMap { v =>
-      val key = fs(spark, dir).makeQualified(manifestPath(dir, v)).toString
-      mCache.synchronized(Option(mCache.get(key))).map(_.rows.length)
+    latestVersion(spark, dir).flatMap(cached(spark, dir, _)).map(_.rows.length)
+
+  private def cached(spark: SparkSession, dir: String, v: Long): Option[CachedM] = {
+    val key = fs(spark, dir).makeQualified(manifestPath(dir, v)).toString
+    mCache.synchronized(Option(mCache.get(key)))
+  }
+
+  /** Row count per data file of manifest `v`, answered ONLY from the
+    * driver cache, like [[cachedFileCount]]: None when the manifest is
+    * not cached or a file's count is unknown (legacy -1). */
+  private[sources] def cachedFileRows(spark: SparkSession, dir: String,
+                                      v: Long): Option[Map[String, Long]] =
+    cached(spark, dir, v).flatMap { cm =>
+      val (pi, ri) = (cm.schema.fieldIndex("path"), cm.schema.fieldIndex("rows"))
+      val rows = cm.rows.map(r =>
+        r.getString(pi) -> (if (r.isNullAt(ri)) -1L else r.getLong(ri)))
+      if (rows.exists(_._2 < 0L)) None else Some(rows.toMap)
+    }
+
+  /** Rows of the latest version from the driver cache; 0 for a table
+    * with no version yet. */
+  private[sources] def cachedLatestRows(spark: SparkSession,
+                                        dir: String): Option[Long] =
+    latestVersion(spark, dir) match {
+      case None => Some(0L)
+      case Some(v) => cachedFileRows(spark, dir, v).map(_.values.sum)
     }
 
   /** Identity of a version directory's CONTENT, not just its
@@ -978,8 +1001,10 @@ object Snapshots {
     * files are carried into the new manifest by reference: a 1 GB
     * batch against a 100 TB table rewrites the few files its keys
     * land in. On a version collision the whole merge re-derives
-    * against the new latest snapshot and retries. */
-  def mergeCommit(spark: SparkSession, dir: String, changes: DataFrame,
+    * against the new latest snapshot and retries. A merge whose table
+    * rows plus change rows (a bound known without a job only for a
+    * driver-local batch) fit [[TickBudget]] runs interpreted. */
+  def mergeCommit(spark: SparkSession, dir: String, changes0: DataFrame,
                   keyCols: Seq[String], opCol: String = "op",
                   seqCol: String = "seq",
                   pruneCol: Option[String] = None,
@@ -988,6 +1013,12 @@ object Snapshots {
                   batchId: Long = -1L,
                   extraStatsCols: Seq[String] = Nil,
                   clusterBy: Option[String] = None): Long = {
+    val bound = for {
+      table <- cachedLatestRows(spark, dir)
+      batch <- changes0.queryExecution.analyzed.maxRows
+    } yield table + batch
+    TickBudget(spark, bound) { spark =>
+    val changes = org.apache.spark.sql.GraftSessionAccess.rebase(spark, changes0)
     val dataCols = changes.columns.filterNot(c => c == opCol || c == seqCol)
     val pc = pruneCol.getOrElse(keyCols.head)
     require(dataCols.contains(pc), s"changes must carry $pc")
@@ -1006,6 +1037,7 @@ object Snapshots {
           col(s"__w.$opCol"): _*)
         .filter(col(opCol) =!= "d")
         .select(dataCols.map(col): _*)
+    }
     }
   }
 
@@ -1038,8 +1070,11 @@ object Snapshots {
     // the duration of the merge; callers that already persisted keep
     // their own handle (storage level check — re-persisting would
     // just warn).
+    // A batch that plans as driver-local rows is already materialized.
     val ownPersist =
-      changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+        !changes.queryExecution.optimizedPlan.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     if (ownPersist) changes.persist()
     try {
     while (true) {

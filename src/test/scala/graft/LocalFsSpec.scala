@@ -150,9 +150,9 @@ class LocalFsSpec extends SparkSpec {
     for (fc <- Seq(graftFc, stockFc))
       assert(read(fc.open(p, 4096)).failed.get.isInstanceOf[ChecksumException])
     // the one-argument `open`, which Spark's checkpoint file manager
-    // calls, skips the checker in Hadoop's `FilterFs` under either
-    // implementation: both hand back the flipped bytes
-    assert(read(graftFc.open(p)) == read(stockFc.open(p)))
-    assert(read(graftFc.open(p)).get == bytes.toSeq)
+    // calls, is checksummed too under graft's; the stock `LocalFs`
+    // hands it to the raw file system and returns the flipped bytes
+    assert(read(graftFc.open(p)).failed.get.isInstanceOf[ChecksumException])
+    assert(read(stockFc.open(p)).get == bytes.toSeq)
   }
 }
