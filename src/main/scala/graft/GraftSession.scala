@@ -56,17 +56,23 @@ import org.apache.spark.sql.SparkSession
   * With isolation off, tasks use the executor's own loader and share
   * the driver's cache entries.
   *
-  * Maintained-view ticks whose bound on the rows they read is below
-  * `graft.sources.TickBudget.Rows` (500k) run interpreted, on a clone
+  * Maintained-view ticks whose bound on the rows they process is below
+  * `graft.sources.TickBudget.Rows` (300k) run interpreted, on a clone
   * of the session with `spark.sql.codegen.factoryMode=NO_CODEGEN`. An
   * O(churn) tick then compiles no whole-stage class (with generated
   * code, a traced `view_ticks` run spent 9.5 s of janino time, summed
-  * over threads, in its timed 22.5 s). The budget is the measured crossover of an
-  * agg-view tick (sum, min, max with deletes) against generated code
-  * whose classes were already compiled: interpreted is 10–30% faster
-  * at 300k source rows and 15–35% slower at 1M
-  * (`plans/tick_budget/crossover.txt`). Larger ticks keep whole-stage
-  * code generation.
+  * over threads, in its timed 22.5 s). A tick whose transform fans a
+  * source row out counts the rows it makes: a positional text index
+  * counts its tokens from its positional postings; a first build, or a
+  * transform whose fan-out nothing measures, keeps generated code. The
+  * budget is the lowest crossover measured against
+  * generated code whose classes were already compiled, over every tick
+  * shape: a `mergeCommit` is even at 300k rows and 20–90% slower
+  * interpreted at 1M; agg, top-k and positional text-index ticks and
+  * `search` cross over between 0.6M and 3M
+  * (`plans/tick_budget/crossover*.txt`). Larger ticks keep whole-stage
+  * code generation. No benchmark workload lies above the budget, so the
+  * large side of the choice rests on those timing loops alone.
   */
 object GraftSession {
   def local(cores: Int = 32): SparkSession = tuned(

@@ -523,6 +523,14 @@ object IncrementalViews {
   private val AggMarkerRe = raw"(intent|processed)-F(-?\d+)-T(-?\d+)".r
   private case class AggTick(kind: String, from: Long, to: Long)
 
+  /** How many rows a tick makes of one source row, for its budget
+    * ([[withSourceTick]]): one, as many as `view` holds per source row,
+    * or unknown (a transform that may fan rows out). */
+  private sealed trait FanOut
+  private case object OneRow extends FanOut
+  private final case class Like(view: String) extends FanOut
+  private case object Unknown extends FanOut
+
   private def aggMarkers(f: FileSystem, root: Path): Seq[AggTick] =
     if (!f.exists(root)) Nil
     else f.listStatus(root).map(_.getPath.getName).toSeq.collect {
@@ -547,12 +555,18 @@ object IncrementalViews {
     * versions the tick folded.
     *
     * The tick runs interpreted ([[TickBudget]]) when the rows it can
-    * read fit the budget: the files the delta reads, the whole view
-    * (an upper bound on the affected view files) and, for a `work`
-    * that `rereadsSource`, the whole source as of the tick. */
+    * process fit the budget: the rows of the files the delta reads
+    * and, for a `work` that `rereadsSource`, of the whole source as of
+    * the tick, each times the rows one source row becomes (`fanOut`),
+    * plus the whole view (an upper bound on the affected view files).
+    * A fan-out measured `Like` a view is that view's rows per source
+    * row at the tick's start; while the view holds no rows (an initial
+    * build), or when the fan-out is `Unknown`, the bound is unknown
+    * and the tick keeps generated code. */
   private def withSourceTick(spark: SparkSession, srcDir: String,
                              viewDir: String, stateName: String,
-                             rereadsSource: Boolean)
+                             rereadsSource: Boolean,
+                             fanOut: FanOut = OneRow)
                             (work: (SparkSession, DataFrame, AggTick) => Unit)
       : Seq[Long] =
     // same single-maintainer lock (and rationale) as [[refreshJoin]]
@@ -577,16 +591,26 @@ object IncrementalViews {
     }
 
     val to = Snapshots.cachedFileRows(spark, srcDir, tick.to)
-    val feedRows =
-      if (tick.from < 0L) to.map(_.values.sum)
-      else for (a <- to; b <- Snapshots.cachedFileRows(spark, srcDir, tick.from))
-        yield a.collect { case (p, n) if !b.contains(p) => n }.sum +
-          b.collect { case (p, n) if !a.contains(p) => n }.sum
+    val from =
+      if (tick.from < 0L) Some(Map.empty[String, Long])
+      else Snapshots.cachedFileRows(spark, srcDir, tick.from)
+    val perRow = fanOut match {
+      case OneRow => Some(1.0)
+      case Like(v) => for {
+          n <- Snapshots.cachedLatestRows(spark, v) if n > 0L
+          s <- from.map(_.values.sum) if s > 0L
+        } yield math.max(1.0, n.toDouble / s)
+      case Unknown => None
+    }
     val bound = for {
-      feed <- feedRows
+      a <- to; b <- from; k <- perRow
       view <- Snapshots.cachedLatestRows(spark, viewDir)
-      src <- if (rereadsSource) to.map(_.values.sum) else Some(0L)
-    } yield feed + view + src
+    } yield {
+      val feed = a.collect { case (p, n) if !b.contains(p) => n }.sum +
+        b.collect { case (p, n) if !a.contains(p) => n }.sum
+      val src = if (rereadsSource) a.values.sum else 0L
+      ((feed + src) * k).toLong + view
+    }
     TickBudget(spark, bound) { spark =>
       // ONE delta covering every pending version, pinned for replay
       val changes =
@@ -668,10 +692,22 @@ object IncrementalViews {
                  sumScale: Int = 6,
                  minMaxCols: Seq[String] = Nil,
                  where: Option[Column] = None,
-                 transform: Option[DataFrame => DataFrame] = None): Seq[Long] = {
+                 transform: Option[DataFrame => DataFrame] = None): Seq[Long] =
+    aggTick(spark, srcDir, viewDir, groupKeys, sumCols, sumScale, minMaxCols,
+      where, transform, if (transform.isEmpty) OneRow else Unknown)
+
+  /** [[refreshAgg]], told how many rows `transform` makes of one
+    * source row ([[withSourceTick]]); a caller-supplied transform may
+    * fan rows out by any factor, so [[refreshAgg]] calls it unknown. */
+  private def aggTick(spark: SparkSession, srcDir: String, viewDir: String,
+                      groupKeys: Seq[String], sumCols: Seq[String],
+                      sumScale: Int, minMaxCols: Seq[String],
+                      where: Option[Column],
+                      transform: Option[DataFrame => DataFrame],
+                      fanOut: FanOut): Seq[Long] = {
     require(groupKeys.nonEmpty, "refreshAgg needs at least one group key")
     withSourceTick(spark, srcDir, viewDir, "_agg_state",
-        rereadsSource = minMaxCols.nonEmpty) { (spark, changes, tick) =>
+        rereadsSource = minMaxCols.nonEmpty, fanOut) { (spark, changes, tick) =>
       applyAggDelta(spark, srcDir, viewDir, groupKeys, sumCols, sumScale,
         minMaxCols, where, transform, changes, tick.to)
     }
@@ -1693,25 +1729,29 @@ object IncrementalViews {
       () => refreshPositionalIndex(spark, srcDir, viewRoot, idCol, textCol))
     // independent chains concurrently (see [[parallelChains]]):
     // postings | lengths→global stats | null-doc counter | positional
+    // the ticks' budget counts the tokens `lens` makes of the feed: the
+    // positional postings hold one row per token; without them the
+    // count is unknown (the postings hold one per distinct token)
+    val tokens = if (positional) Like(s"$viewRoot/pos") else Unknown
     parallelChains(spark, Seq(
-      () => refreshAgg(spark, srcDir, s"$viewRoot/post",
-        Seq("__token", "__doc"), Seq("__dl"), sumScale = 0,
-        transform = Some(lens)),
+      () => aggTick(spark, srcDir, s"$viewRoot/post",
+        Seq("__token", "__doc"), Seq("__dl"), 0, Nil, None,
+        Some(lens), tokens),
       () => {
-        refreshAgg(spark, srcDir, s"$viewRoot/dlen", Seq("__doc"), Nil,
-          transform = Some(lens))
-        refreshAgg(spark, s"$viewRoot/dlen", s"$viewRoot/gstat", Seq(GlobalKey),
-          Seq("__dl"), sumScale = 0, transform = Some(df =>
+        aggTick(spark, srcDir, s"$viewRoot/dlen", Seq("__doc"), Nil, 6, Nil,
+          None, Some(lens), tokens)
+        aggTick(spark, s"$viewRoot/dlen", s"$viewRoot/gstat", Seq(GlobalKey),
+          Seq("__dl"), 0, Nil, None, Some(df =>
             df.withColumn(GlobalKey, lit(0L))
-              .withColumn("__dl", col("__cnt"))))
+              .withColumn("__dl", col("__cnt"))), OneRow)
       },
       // indicator SUM over ALL docs, not a filtered count: the usual
       // corpus has zero NULL texts, and a forever-empty view (no data
       // files in any version) cannot be read back by later ticks
-      () => refreshAgg(spark, srcDir, s"$viewRoot/nullc", Seq(GlobalKey),
-        Seq("__nn"), sumScale = 0, transform = Some(df =>
+      () => aggTick(spark, srcDir, s"$viewRoot/nullc", Seq(GlobalKey),
+        Seq("__nn"), 0, Nil, None, Some(df =>
           df.select(col("__change"), lit(0L).as(GlobalKey),
-            when(col(textCol).isNull, 1L).otherwise(0L).as("__nn"))))
+            when(col(textCol).isNull, 1L).otherwise(0L).as("__nn"))), OneRow)
       ) ++ posChain)
   }
 
@@ -1790,11 +1830,15 @@ object IncrementalViews {
         posexplode(Text.tokens(col(textCol))))
       .withColumnRenamed("pos", "__pos")
       .withColumnRenamed("col", "__token")
+    // one row per token: each view's rows per document count the
+    // tokens its ticks' budget must cover
     parallelChains(spark, Seq(
-      () => refreshAgg(spark, srcDir, s"$viewRoot/pos",
-        Seq("__token", "__doc", "__pos"), Nil, transform = Some(lens)),
-      () => refreshAgg(spark, srcDir, s"$viewRoot/posd",
-        Seq("__doc", "__pos", "__token"), Nil, transform = Some(lens))))
+      () => aggTick(spark, srcDir, s"$viewRoot/pos",
+        Seq("__token", "__doc", "__pos"), Nil, 6, Nil, None, Some(lens),
+        Like(s"$viewRoot/pos")),
+      () => aggTick(spark, srcDir, s"$viewRoot/posd",
+        Seq("__doc", "__pos", "__token"), Nil, 6, Nil, None, Some(lens),
+        Like(s"$viewRoot/posd"))))
   }
 
   /** EXACT PHRASE SEARCH over the positional postings

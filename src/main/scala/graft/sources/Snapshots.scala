@@ -1070,11 +1070,8 @@ object Snapshots {
     // the duration of the merge; callers that already persisted keep
     // their own handle (storage level check — re-persisting would
     // just warn).
-    // A batch that plans as driver-local rows is already materialized.
     val ownPersist =
-      changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
-        !changes.queryExecution.optimizedPlan.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (ownPersist) changes.persist()
     try {
     while (true) {

@@ -29,11 +29,13 @@ class TickBudgetSpec extends SparkSpec {
                              page: Seq[String])
 
   /** Agg view (min/max with deletes, an emptied group, a NULL key),
-    * positional text index and a search page, each fed by a
-    * `mergeCommit`, with the budget forced to `budget`. Returns the
-    * outcome, the classes compiled by the ticks, and how many of their
-    * queries ran and how many of those ran whole-stage code. */
-  private def scenario(budget: Long): (Outcome, Long, Int, Int) = {
+    * positional text index and a search page, each fed by two rounds
+    * of `mergeCommit`, with the budget forced to `budget`. Returns the
+    * outcome, how many queries of the initial builds ran whole-stage
+    * code, the classes compiled in the second round, and how many
+    * queries that round ran and how many of those ran whole-stage
+    * code. */
+  private def scenario(budget: Long): (Outcome, Int, Long, Int, Int) = {
     val s = spark; import s.implicits._
     val (ev, agg, docs, text) = (tmpDir(), tmpDir(), tmpDir(), tmpDir())
     Snapshots.commit(Seq[(Long, String, java.lang.Double)](
@@ -44,19 +46,24 @@ class TickBudgetSpec extends SparkSpec {
         (1L, "spark joins tables by key"), (2L, "a hash join builds one side"),
         (3L, "spark streams micro batches"), (4L, "tables of keys and values"))
       .toDF("doc_id", "text"), docs, statsCol = Some("doc_id"))
-    val evChanges = Seq[(Long, String, java.lang.Double, String, Long)](
+    val evChanges = Seq[Seq[(Long, String, java.lang.Double, String, Long)]](Seq(
         (2L, "a", 2.0, "d", 1L),      // the min of "a" leaves
         (4L, "c", 6.0, "d", 1L),      // "c" empties
         (6L, null, 8.0, "d", 1L),     // the NULL group loses its max
         (3L, "b", 0.5, "u", 1L),      // an update lowers "b"'s min
         (8L, "d", 4.0, "u", 1L),      // a new group
-        (9L, null, 9.5, "u", 1L))
-      .toDF("id", "g", "x", "op", "seq")
-    val docChanges = Seq(
+        (9L, null, 9.5, "u", 1L)), Seq(
+        (1L, "a", 1.0, "d", 2L),      // "a" empties
+        (9L, null, 9.5, "d", 2L),     // the NULL group loses its max again
+        (7L, "b", 2.5, "u", 2L),      // a NULL value becomes one
+        (10L, "e", 1.5, "u", 2L)))
+    val docChanges = Seq(Seq(
         (5L, "spark sorts and joins tables", "u", 1L),
         (2L, "", "d", 1L),
-        (6L, "ünïcödé spark text", "u", 1L))
-      .toDF("doc_id", "text", "op", "seq")
+        (6L, "ünïcödé spark text", "u", 1L)), Seq(
+        (3L, "spark streams tables", "u", 2L),
+        (4L, "", "d", 2L),
+        (7L, "joins of tables", "u", 2L)))
 
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
     val listener = new QueryExecutionListener {
@@ -65,33 +72,51 @@ class TickBudgetSpec extends SparkSpec {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                              e: Exception): Unit = ()
     }
+    def round(i: Int): Seq[String] = {
+      Snapshots.mergeCommit(spark, ev, evChanges(i).toDF("id", "g", "x", "op", "seq"),
+        Seq("id"))
+      IncrementalViews.refreshAgg(spark, ev, agg, Seq("g"), Seq("x"),
+        minMaxCols = Seq("x"))
+      Snapshots.mergeCommit(spark, docs, docChanges(i).toDF("doc_id", "text", "op", "seq"),
+        Seq("doc_id"))
+      IncrementalViews.refreshTextIndex(spark, docs, text, "doc_id", "text",
+        positional = true)
+      IncrementalViews.search(spark, text, Seq("spark", "tables"), k = 3,
+        snippetK = 1).collect().map(_.toSeq.mkString("|")).toSeq
+    }
+    import scala.jdk.CollectionConverters._
     val old = TickBudget.rows
     spark.listenerManager.register(listener)
-    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     TickBudget.rows = budget
+    var compiles0 = 0L
+    var buildWhole = 0
     val page = try {
       IncrementalViews.refreshAgg(spark, ev, agg, Seq("g"), Seq("x"),
         minMaxCols = Seq("x"))
       IncrementalViews.refreshTextIndex(spark, docs, text, "doc_id", "text",
         positional = true)
-      Snapshots.mergeCommit(spark, ev, evChanges, Seq("id"))
-      IncrementalViews.refreshAgg(spark, ev, agg, Seq("g"), Seq("x"),
-        minMaxCols = Seq("x"))
-      Snapshots.mergeCommit(spark, docs, docChanges, Seq("doc_id"))
-      IncrementalViews.refreshTextIndex(spark, docs, text, "doc_id", "text",
-        positional = true)
-      IncrementalViews.search(spark, text, Seq("spark", "tables"), k = 3,
-        snippetK = 1).collect().map(_.toSeq.mkString("|")).toSeq
+      Thread.sleep(1000) // query listeners hear of actions asynchronously
+      buildWhole = plans.asScala.count(identity)
+      // Spark compiles a few helper classes whatever the factory mode:
+      // the partial aggregation's row joiner, a cached frame's column
+      // accessor and a sort's ordering, each once per schema and JVM.
+      // The first round compiles those (again, when the builds' classes
+      // pushed them out of the codegen cache); the second round
+      // compiles nothing when it runs interpreted
+      round(0)
+      Thread.sleep(1000)
+      plans.clear()
+      compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      round(1)
     } finally TickBudget.rows = old
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     Thread.sleep(1000) // query listeners hear of actions asynchronously
     spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
     val tables = (Seq("ev" -> ev, "agg" -> agg, "docs" -> docs) ++
         Seq("post", "dlen", "gstat", "nullc", "pos", "posd")
           .map(v => v -> s"$text/$v"))
       .map { case (k, d) => k -> (sorted(Snapshots.read(spark, d)), entries(d)) }.toMap
-    (Outcome(tables, page), compiled, plans.asScala.size,
+    (Outcome(tables, page), buildWhole, compiled, plans.asScala.size,
       plans.asScala.count(identity))
   }
 
@@ -104,29 +129,72 @@ class TickBudgetSpec extends SparkSpec {
   }
 
   test("interpreted and generated ticks give identical rows and manifests; the interpreted ones compile nothing") {
-    // Spark compiles a few helper classes whatever the factory mode:
-    // the partial aggregation's row joiner, a cached frame's column
-    // accessor and a sort's ordering, each once per schema and JVM. A
-    // first interpreted pass compiles those; the second must compile
-    // nothing. Both run before the generated pass, so no class the
-    // second one skips can come from that pass's cache entries.
-    val (warm, _, _, _) = scenario(Long.MaxValue)
-    val (small, smallCompiles, smallPlans, smallWhole) = scenario(Long.MaxValue)
-    val (big, _, bigPlans, bigWhole) = scenario(0L)
-    assert(warm == small)
+    val (small, smallBuildWhole, smallCompiles, smallPlans, smallWhole) =
+      scenario(Long.MaxValue)
+    val (big, _, _, bigPlans, bigWhole) = scenario(0L)
     assert(small.tables.keySet == big.tables.keySet)
     small.tables.foreach { case (k, (rows, manifest)) =>
       assert(rows == big.tables(k)._1, s"$k rows differ")
       assert(manifest == big.tables(k)._2, s"$k manifest entries differ")
     }
     assert(small.page == big.page && small.page.nonEmpty)
-    // the agg view kept the NULL group and dropped the emptied one
+    // the agg view kept the NULL group and dropped the emptied ones
     assert(small.tables("agg")._1.exists(_.startsWith("null|")))
-    assert(!small.tables("agg")._1.exists(_.startsWith("c|")))
+    assert(!small.tables("agg")._1.exists(r => r.startsWith("c|") || r.startsWith("a|")))
     assert(smallCompiles == 0L, s"interpreted ticks compiled $smallCompiles classes")
     assert(smallPlans > 0 && smallWhole == 0,
       s"$smallWhole of $smallPlans interpreted queries ran whole-stage code")
     assert(bigWhole > 0, s"none of $bigPlans generated-code queries ran whole-stage code")
+    // the text index's first build cannot know how many tokens a
+    // document makes, so it keeps generated code whatever the budget
+    assert(smallBuildWhole > 0)
+  }
+
+  test("a tick's bound counts the rows its transform makes of each source row, or is unknown") {
+    val s = spark; import s.implicits._
+    val (docs, text) = (tmpDir(), tmpDir())
+    // 10 documents of 100 tokens in one file: an update rewrites the
+    // file, so the tick reads 20 documents, 2,000 token rows, next to
+    // a positional view of 1,000 rows; counted as documents the bound
+    // would be 1,020
+    def doc(i: Long, w: String) = (i, Seq.fill(100)(w).mkString(" "))
+    Snapshots.commit((1L to 10L).map(doc(_, "alpha")).toDF("doc_id", "text")
+      .coalesce(1), docs, statsCol = Some("doc_id"))
+    def posTick() =
+      IncrementalViews.refreshPositionalIndex(spark, docs, text, "doc_id", "text")
+    // a caller's transform, which may fan a row out by any factor
+    val vocab = tmpDir()
+    def vocabTick() = IncrementalViews.refreshAgg(spark, docs, vocab, Seq("__token"), Nil,
+      transform = Some(_.select(col("__change"), explode(split(col("text"), " ")).as("__token"))))
+    posTick(); vocabTick()
+    /** Queries of `tick`, after one update, that ran whole-stage code. */
+    def tickWhole(budget: Long, w: String)(tick: => Unit): Int = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               d: Long): Unit = plans.add(wholeStage(qe.executedPlan))
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      Snapshots.mergeCommit(spark, docs, Seq((3L, doc(3L, w)._2, "u", 1L))
+        .toDF("doc_id", "text", "op", "seq"), Seq("doc_id"))
+      val old = TickBudget.rows
+      spark.listenerManager.register(listener)
+      TickBudget.rows = budget
+      try tick
+      finally TickBudget.rows = old
+      Thread.sleep(1000) // query listeners hear of actions asynchronously
+      spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.count(identity)
+    }
+    assert(tickWhole(2000L, "beta")(posTick()) > 0)
+    assert(tickWhole(4000L, "gamma")(posTick()) == 0)
+    assert(tickWhole(Long.MaxValue, "delta")(vocabTick()) > 0)
+    assert(Snapshots.read(spark, s"$text/pos").filter($"__token" === "gamma")
+      .count() == 100L)
+    assert(Snapshots.read(spark, vocab).filter($"__token" === "delta")
+      .select("__cnt").as[Long].collect().toSeq == Seq(100L))
   }
 
   test("a tick whose bound is unknown keeps generated code") {
