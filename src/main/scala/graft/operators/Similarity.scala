@@ -489,8 +489,8 @@ object Similarity {
     * batch — the grace window for external in-flight readers is n
     * ticks' worth of feed time; keep it 0 (manual) when long analytic
     * queries share the index. The process-local tick counter resets
-    * on restart (the cadence is operational, not transactional — same
-    * discipline as the view maintainers' housekeepEvery). */
+    * on restart (the cadence is operational, not transactional — the
+    * same caveat as housekeeping scheduled in a `maintain` tick). */
   def maintainIvf(spark: org.apache.spark.sql.SparkSession,
                   srcDir: String, path: String, momentsDir: String,
                   checkpointDir: String, idCol: String, vecCol: String,
@@ -2113,7 +2113,7 @@ object Similarity {
     * [[pqRetrain]] by hand, just without having to watch the
     * distortion dashboard. The process-local tick counter resets on
     * restart (operational cadence, not transactional — the
-    * housekeepEvery discipline). */
+    * [[maintainIvf]] discipline). */
   def maintainPq(spark: org.apache.spark.sql.SparkSession,
                  srcDir: String, path: String, checkpointDir: String,
                  idCol: String, vecCol: String, dim: Int,

@@ -504,9 +504,9 @@ object IncrementalViews {
       writeMarker(f, root, tick.copy(kind = "processed"))
       // spent markers: intents at or below the new watermark, and
       // older processed markers — only the NEWEST processed marker is
-      // the watermark, so without this GC an always-on maintainJoin
-      // (one tick per micro-batch) grows _view_state O(ticks) forever
-      // and re-lists it all on every refresh
+      // the watermark, so without this GC an always-on `maintain` of
+      // a join (one tick per micro-batch) grows _view_state O(ticks)
+      // forever and re-lists it all on every refresh
       markers(f, root).filter(m =>
         (m.kind == "intent" && m.t <= tick.t) ||
           (m.kind == "processed" && m.t < tick.t))
@@ -968,19 +968,6 @@ object IncrementalViews {
     }
   }
 
-  /** [[refreshPerKey]] driven by the source's change feed. */
-  def maintainPerKey(spark: SparkSession, srcDir: String, viewDir: String,
-                     keyCols: Seq[String], rowOrder: Seq[String],
-                     checkpointDir: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger =
-                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                    (derive: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshPerKey(spark, srcDir, viewDir, keyCols, rowOrder, derive)
-      ()
-    }
-
   /** INCREMENTALLY-MAINTAINED SESSION STATS — the max-gap
     * sessionization rollup ([[graft.operators.Relational.sessionStats]])
     * as a standing per-(user, session) table: a churned user's whole
@@ -998,23 +985,6 @@ object IncrementalViews {
       df => graft.operators.Relational.sessionStats(
         df, userCol, tsCol, idCol, maxGapSec))
   }
-
-  /** [[refreshSessionStats]] driven by the source's change feed;
-    * `housekeepEvery = n` settles the view's compaction + retention
-    * debt every n-th tick (clustered by the user column). */
-  def maintainSessionStats(spark: SparkSession, srcDir: String,
-                           viewDir: String, userCol: String, tsCol: String,
-                           idCol: String, maxGapSec: Long,
-                           checkpointDir: String,
-                           trigger: org.apache.spark.sql.streaming.Trigger =
-                             org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                           housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshSessionStats(spark, srcDir, viewDir, userCol, tsCol, idCol,
-        maxGapSec); ()
-    } { () => housekeep(spark, viewDir, clusterBy = Some(userCol)) }
 
   /** The maintained session table — batch `sessionStats`'s exact
     * columns, zero event I/O at serve. */
@@ -1038,22 +1008,6 @@ object IncrementalViews {
         df, userCol, tsCol, typeCol, stages))
   }
 
-  /** [[refreshFunnel]] driven by the source's change feed;
-    * `housekeepEvery = n` settles the view's compaction + retention
-    * debt every n-th tick (clustered by the user column). */
-  def maintainFunnel(spark: SparkSession, srcDir: String, viewDir: String,
-                     userCol: String, tsCol: String, typeCol: String,
-                     stages: Seq[String], checkpointDir: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger =
-                       org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                     housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshFunnel(spark, srcDir, viewDir, userCol, tsCol, typeCol, stages)
-      ()
-    } { () => housekeep(spark, viewDir, clusterBy = Some(userCol)) }
-
   /** The maintained funnel table — batch `funnel`'s exact columns. */
   def readFunnel(spark: SparkSession, viewDir: String): DataFrame =
     Snapshots.read(spark, viewDir).drop("__rank")
@@ -1076,23 +1030,6 @@ object IncrementalViews {
         df, userCol, tsCol, idCol, typeCol, maxGapSec))
   }
 
-  /** [[refreshSessionPaths]] driven by the source's change feed;
-    * `housekeepEvery = n` settles the view's compaction + retention
-    * debt every n-th tick. */
-  def maintainSessionPaths(spark: SparkSession, srcDir: String,
-                           viewDir: String, userCol: String, tsCol: String,
-                           idCol: String, typeCol: String, maxGapSec: Long,
-                           checkpointDir: String,
-                           trigger: org.apache.spark.sql.streaming.Trigger =
-                             org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                           housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshSessionPaths(spark, srcDir, viewDir, userCol, tsCol, idCol,
-        typeCol, maxGapSec); ()
-    } { () => housekeep(spark, viewDir, clusterBy = Some(userCol)) }
-
   /** The k most common session paths from the maintained view —
     * batch `topPaths`'s exact output, O(live sessions) to serve. */
   def readTopPaths(spark: SparkSession, viewDir: String,
@@ -1104,20 +1041,6 @@ object IncrementalViews {
       .orderBy(col("n_sessions").desc, col("path"))
       .limit(k)
   }
-
-  /** [[refreshTopK]] driven by the source's change feed. */
-  def maintainTopK(spark: SparkSession, srcDir: String, viewDir: String,
-                   partitionKeys: Seq[String], orderCol: String, k: Int,
-                   tieBreak: Seq[String] = Nil, ascending: Boolean = false,
-                   checkpointDir: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger =
-                     org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshTopK(spark, srcDir, viewDir, partitionKeys, orderCol, k,
-        tieBreak, ascending)
-      ()
-    }
 
   /** Incrementally-maintained per-group `COUNT(DISTINCT valueCol)` —
     * a CASCADE of two aggregate views, the composition the Z-set
@@ -1151,19 +1074,6 @@ object IncrementalViews {
     refreshAgg(spark, pairsDir, viewDir, groupKeys, Nil)
     folded
   }
-
-  /** [[refreshDistinct]] driven by the source's change feed. */
-  def maintainDistinct(spark: SparkSession, srcDir: String,
-                       pairsDir: String, viewDir: String,
-                       groupKeys: Seq[String], valueCol: String,
-                       checkpointDir: String,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshDistinct(spark, srcDir, pairsDir, viewDir, groupKeys, valueCol)
-      ()
-    }
 
   /** The distinct-count view as a plain DataFrame: the group keys plus
     * the maintained `COUNT(DISTINCT ...)` as `countName`. */
@@ -1208,22 +1118,6 @@ object IncrementalViews {
         floor(unix_micros(col(tsCol)) / lit(604800000000L))
           .cast("long").as("__wk"))))
   }
-
-  /** [[refreshRetention]] driven by the source's change feed;
-    * `housekeepEvery = n` settles the pair view's compaction +
-    * retention debt every n-th tick (clustered by the user column so
-    * affected-key pruning stays sharp). */
-  def maintainRetention(spark: SparkSession, srcDir: String,
-                        viewDir: String, userCol: String, tsCol: String,
-                        checkpointDir: String,
-                        trigger: org.apache.spark.sql.streaming.Trigger =
-                          org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                        housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshRetention(spark, srcDir, viewDir, userCol, tsCol); ()
-    } { () => housekeep(spark, viewDir, clusterBy = Some(userCol)) }
 
   /** The retention report from the maintained pair view —
     * `(cohort_wk, offset_wk, n_active)` exactly as the batch operator
@@ -1356,22 +1250,6 @@ object IncrementalViews {
         d.withColumn(s"__cp_${i}_$j",
           weighted(col(cols(i))) * col(cols(j))) }
   }
-
-  /** [[refreshCorrMatrix]] driven by the source's change feed. */
-  def maintainCorrMatrix(spark: SparkSession, srcDir: String,
-                         viewDir: String, groupKeys: Seq[String],
-                         cols: Seq[String], scale: Int = 2,
-                         where: Option[Column] = None,
-                         weight: Option[(String, Int)] = None,
-                         checkpointDir: String,
-                         trigger: org.apache.spark.sql.streaming.Trigger =
-                           org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshCorrMatrix(spark, srcDir, viewDir, groupKeys, cols, scale,
-        where, weight)
-      ()
-    }
 
   /** The serve-side must KNOW how the moment view was built: a
     * weight-built view stores Σw as `sum___cw` and every moment
@@ -1573,13 +1451,8 @@ object IncrementalViews {
     // SessionCatalog monitor — worker threads would block on it for
     // their own plan analysis while this thread waits for them. If
     // the caller already holds that lock, run the chains inline.
-    // (Lock assumption validated against Spark 4.1.2's analyzer; a
-    // catalog implementation that serializes resolution on a
-    // DIFFERENT monitor can force sequential execution with the
-    // `spark.graft.maintenance.sequentialChains=true` kill switch.)
-    val sequential = spark.conf
-      .get("spark.graft.maintenance.sequentialChains", "false").toBoolean
-    if (sequential || chains.lengthCompare(1) <= 0 ||
+    // (Lock assumption validated against Spark 4.1.2's analyzer.)
+    if (chains.lengthCompare(1) <= 0 ||
         Thread.holdsLock(spark.sessionState.catalog)) {
       chains.foreach(_()); return
     }
@@ -1600,20 +1473,6 @@ object IncrementalViews {
         })
     } finally pool.shutdown()
   }
-
-  /** [[refreshCorpusProfile]] driven by the source's change feed. */
-  def maintainCorpusProfile(spark: SparkSession, srcDir: String,
-                            viewRoot: String, textCol: String,
-                            checkpointDir: String,
-                            trigger: org.apache.spark.sql.streaming.Trigger =
-                              org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                            dupKeyFingerprint: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshCorpusProfile(spark, srcDir, viewRoot, textCol,
-        dupKeyFingerprint = dupKeyFingerprint)
-      ()
-    }
 
   /** The maintained dataset card, served from the profile views as the
     * same `(metric, value)` rows [[graft.operators.Corpus
@@ -1866,48 +1725,6 @@ object IncrementalViews {
       .groupBy(col("__doc"))
       .agg(count(lit(1L)).as("hits"))
       .select(col("__doc").as(idCol), col("hits"))
-  }
-
-  /** [[refreshTextIndex]] driven by the source's change feed.
-    * `housekeepEvery = n` settles the whole index's compaction +
-    * retention debt ([[housekeepTextIndex]]) after every n-th tick —
-    * an always-on index is 3-5 CoW views each accruing small files
-    * and history per tick, and without a schedule the caller must
-    * remember to housekeep each by hand. (The tick counter is
-    * process-local: a restarted maintainer starts its cadence over,
-    * which only shifts WHEN housekeeping runs — it is idempotent and
-    * never affects view contents.) */
-  def maintainTextIndex(spark: SparkSession, srcDir: String,
-                        viewRoot: String, idCol: String, textCol: String,
-                        checkpointDir: String,
-                        trigger: org.apache.spark.sql.streaming.Trigger =
-                          org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-                        positional: Boolean = false,
-                        housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshTextIndex(spark, srcDir, viewRoot, idCol, textCol,
-        positional = positional)
-    } { () => housekeepTextIndex(spark, viewRoot) }
-
-  /** [[maintain]] plus the housekeeping cadence every scheduled
-    * maintainer shares: `settle()` runs after every
-    * `housekeepEvery`-th tick (0 = never). The tick counter is
-    * process-local — a restarted maintainer starts its cadence over,
-    * which only shifts WHEN the idempotent housekeeping runs, never
-    * view contents. */
-  private def maintainWithCadence(spark: SparkSession,
-      inputDirs: Seq[String], checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger,
-      housekeepEvery: Int)(tick: () => Unit)(settle: () => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    var ticks = 0L
-    maintain(spark, inputDirs, checkpointDir, trigger) { () =>
-      tick()
-      ticks += 1
-      if (housekeepEvery > 0 && ticks % housekeepEvery == 0) settle()
-    }
   }
 
   /** One-call housekeeping for every view the text index maintains
@@ -2738,27 +2555,6 @@ object IncrementalViews {
       }))
   }
 
-  /** [[refreshCooccurrence]] driven by the source's change feed.
-    * `housekeepEvery = n` settles the whole root's compaction +
-    * retention debt ([[housekeepCooccurrence]]) after every n-th
-    * tick — [[maintainTextIndex]]'s cadence discipline: an always-on
-    * collocation table is 4 CoW views each accruing small files and
-    * history per tick (same process-local counter caveat: a restarted
-    * maintainer starts its cadence over, shifting only WHEN the
-    * idempotent housekeeping runs). */
-  def maintainCooccurrence(spark: SparkSession, srcDir: String,
-                           viewRoot: String, textCol: String,
-                           checkpointDir: String, window: Int = 2,
-                           trigger: org.apache.spark.sql.streaming.Trigger =
-                             org.apache.spark.sql.streaming.Trigger
-                               .AvailableNow(),
-                           housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshCooccurrence(spark, srcDir, viewRoot, textCol, window)
-    } { () => housekeepCooccurrence(spark, viewRoot) }
-
   /** The PMI table served from the maintained views — same output
     * schema, arithmetic, and rounding as the batch
     * [[graft.operators.Corpus.cooccurrence]] over the current corpus
@@ -2860,25 +2656,6 @@ object IncrementalViews {
               .withColumn("__w", col("__cnt"))))
       }))
   }
-
-  /** [[refreshBigramLm]] driven by the source's change feed.
-    * `housekeepEvery = n` settles the root's compaction + retention
-    * debt ([[housekeepBigramLm]]) after every n-th tick — an
-    * always-on LM otherwise accrues unbounded CoW debt until a manual
-    * `graft_housekeep_bigram_lm` call ([[maintainTextIndex]]'s
-    * cadence discipline, same process-local counter caveat). */
-  def maintainBigramLm(spark: SparkSession, srcDir: String,
-                       viewRoot: String, textCol: String,
-                       checkpointDir: String,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger
-                           .AvailableNow(),
-                       housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshBigramLm(spark, srcDir, viewRoot, textCol)
-    } { () => housekeepBigramLm(spark, viewRoot) }
 
   /** Score a CANDIDATE batch against the maintained LM — the filter
     * step of the CCNet workflow (model on the clean reference corpus,
@@ -3018,26 +2795,6 @@ object IncrementalViews {
           df.select(col("__change"), col(idCol).as("__doc"))))))
   }
 
-  /** [[refreshSpanProfile]] driven by the source's change feed. */
-  def maintainSpanProfile(spark: SparkSession, srcDir: String,
-                          viewRoot: String, idCol: String, textCol: String,
-                          checkpointDir: String, k: Int = 10,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger
-                              .AvailableNow(),
-                          housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshSpanProfile(spark, srcDir, viewRoot, idCol, textCol, k)
-    } { () =>
-      housekeepLayouts(spark, viewRoot, Seq(
-        "spand" -> Seq("__doc", "__span"),
-        "spanc" -> Seq("__span"),
-        "docs" -> Seq("__doc")),
-        4L * 1000 * 1000, 5, 24L * 3600 * 1000)
-    }
-
   /** FEED-DRIVEN SPAN EXCISION at ingest: clean a NEW batch against
     * the maintained span profile as the keep-first authority
     * ([[graft.operators.Corpus.spanExciseAgainst]] over the `spanc`
@@ -3174,26 +2931,6 @@ object IncrementalViews {
           df.select(col("__change"), col(idCol).as("__doc"))))))
   }
 
-  /** [[refreshContamination]] driven by the source's change feed. */
-  def maintainContamination(spark: SparkSession, srcDir: String,
-                            viewRoot: String, idCol: String,
-                            textCol: String, benchDir: String,
-                            checkpointDir: String, n: Int = 3,
-                            trigger: org.apache.spark.sql.streaming.Trigger =
-                              org.apache.spark.sql.streaming.Trigger
-                                .AvailableNow(),
-                            housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshContamination(spark, srcDir, viewRoot, idCol, textCol,
-        benchDir, n)
-    } { () =>
-      housekeepLayouts(spark, viewRoot, Seq(
-        "hits" -> Seq("__doc"), "docs" -> Seq("__doc")),
-        4L * 1000 * 1000, 5, 24L * 3600 * 1000)
-    }
-
   /** The maintained ledger, same shape and arithmetic as the batch
     * [[graft.operators.Corpus.contamination]]: `(idCol,
     * shared_ngrams, contaminated)` for every LIVE corpus doc, clean
@@ -3289,29 +3026,6 @@ object IncrementalViews {
     ()
   }
 
-  /** [[refreshSemanticContamination]] driven by the source's change
-    * feed. */
-  def maintainSemanticContamination(spark: SparkSession, srcDir: String,
-                                    viewRoot: String, idCol: String,
-                                    vecCol: String, benchDir: String,
-                                    checkpointDir: String, nCells: Int,
-                                    threshold: Double, cosScale: Int = 4,
-                                    trigger: org.apache.spark.sql.streaming
-                                      .Trigger =
-                                      org.apache.spark.sql.streaming.Trigger
-                                        .AvailableNow(),
-                                    housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshSemanticContamination(spark, srcDir, viewRoot, idCol, vecCol,
-        benchDir, nCells, threshold, cosScale)
-    } { () =>
-      housekeepLayouts(spark, viewRoot, Seq(
-        "pairs" -> Seq("corpus_id")),
-        4L * 1000 * 1000, 5, 24L * 3600 * 1000)
-    }
-
   /** The maintained ledger, same rows and arithmetic as the batch
     * [[graft.operators.Similarity.semanticContamination]] over the
     * live corpus: `(corpus_id, benchmark_id, cell_id, cosine)` per
@@ -3358,23 +3072,6 @@ object IncrementalViews {
             .as("__v"): _*)))
     ()
   }
-
-  /** [[refreshValueHistogram]] driven by the source's change feed. */
-  def maintainValueHistogram(spark: SparkSession, srcDir: String,
-                             viewDir: String, valueCol: String,
-                             checkpointDir: String, scale: Int = 2,
-                             groupCols: Seq[String] = Nil,
-                             trigger: org.apache.spark.sql.streaming.Trigger =
-                               org.apache.spark.sql.streaming.Trigger
-                                 .AvailableNow(),
-                             housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshValueHistogram(spark, srcDir, viewDir, valueCol, scale,
-        groupCols)
-    } { () => housekeep(spark, viewDir,
-        clusterBy = Some(groupCols.headOption.getOrElse("__v"))) }
 
   /** EXACT percentiles from the maintained histogram: for each p the
     * LOWER order statistic at rank max(1, ceil(p·n)) over the live
@@ -3494,23 +3191,6 @@ object IncrementalViews {
     ()
   }
 
-  /** [[refreshWordFreq]] driven by the source's change feed.
-    * `housekeepEvery = n` settles the view's compaction + retention
-    * debt after every n-th tick ([[maintainTextIndex]]'s cadence
-    * discipline, same process-local counter caveat). */
-  def maintainWordFreq(spark: SparkSession, srcDir: String,
-                       viewDir: String, textCol: String,
-                       checkpointDir: String,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger
-                           .AvailableNow(),
-                       housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(srcDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshWordFreq(spark, srcDir, viewDir, textCol)
-    } { () => housekeep(spark, viewDir, clusterBy = Some("__word")) }
-
   /** The ≤1-character deletion neighborhood of a string column —
     * SymSpell's key set, as a codegen HOF (no UDF): one key per
     * dropped position. Empty strings get an empty array (Spark
@@ -3575,25 +3255,6 @@ object IncrementalViews {
       Seq("__freq"), sumScale = 0, transform = Some(lens))
     ()
   }
-
-  /** [[refreshSpellIndex]] driven by the word-freq view's change feed
-    * (run it alongside [[maintainWordFreq]]; each tick folds whatever
-    * wfreq published since). `housekeepEvery` as everywhere. */
-  def maintainSpellIndex(spark: SparkSession, wordFreqDir: String,
-                         indexDir: String, checkpointDir: String,
-                         maxEdits: Int = 1,
-                         trigger: org.apache.spark.sql.streaming.Trigger =
-                           org.apache.spark.sql.streaming.Trigger
-                             .AvailableNow(),
-                         housekeepEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintainWithCadence(spark, Seq(wordFreqDir), checkpointDir, trigger,
-      housekeepEvery) { () =>
-      refreshSpellIndex(spark, wordFreqDir, indexDir, maxEdits)
-    } { () =>
-      housekeep(spark, indexDir, clusterBy = Some("__key"),
-        extraStatsCols = Seq("__word"))
-    }
 
   /** Compact a key list into at most `maxRanges` sorted disjoint
     * `[lo, hi]` ranges for manifest pruning: runs split at the
@@ -3789,19 +3450,6 @@ object IncrementalViews {
     ()
   }
 
-  /** [[refreshEmbeddingMoments]] driven by the source's change feed. */
-  def maintainEmbeddingMoments(spark: SparkSession, srcDir: String,
-                               viewDir: String, vecCol: String, dim: Int,
-                               checkpointDir: String, scale: Int = 9,
-                               trigger: org.apache.spark.sql.streaming.Trigger =
-                                 org.apache.spark.sql.streaming.Trigger
-                                   .AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshEmbeddingMoments(spark, srcDir, viewDir, vecCol, dim, scale)
-      ()
-    }
-
   /** PCA projection from the MAINTAINED moments — the continuously-
     * current twin of [[graft.operators.Similarity.pca]]: the d×d
     * moment cells are bounded driver metadata (one collect of
@@ -3990,7 +3638,14 @@ object IncrementalViews {
     * it automatically once `spark.graft.maintenance.lockLeaseMs`
     * (default 15 min) elapses and the intent-marker protocol replays
     * the interrupted tick exactly once. `IndexMaintenance.clearLock
-    * (spark, viewDir)` is the immediate manual override. */
+    * (spark, viewDir)` is the immediate manual override.
+    *
+    * Any view's `refreshX` is its tick: `maintain(spark, Seq(src), ck)
+    * { () => refreshAgg(spark, src, view, keys, sums); () }`, with
+    * housekeeping (every n-th tick) inside the same closure — its
+    * tick counter is process-local, so a restarted maintainer starts
+    * its cadence over, which only shifts WHEN the idempotent
+    * housekeeping runs, never view contents. */
   def maintain(spark: SparkSession, inputDirs: Seq[String],
                checkpointDir: String,
                trigger: org.apache.spark.sql.streaming.Trigger =
@@ -4007,35 +3662,6 @@ object IncrementalViews {
       .trigger(trigger)
       .start()
   }
-
-  /** [[refreshJoin]] driven by both inputs' change feeds — the join
-    * view as an always-on (or catch-up-and-stop) streaming job. */
-  def maintainJoin(spark: SparkSession, leftDir: String, rightDir: String,
-                   viewDir: String, joinKeys: Seq[String],
-                   joinType: String = "inner", checkpointDir: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger =
-                     org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(leftDir, rightDir), checkpointDir, trigger) { () =>
-      refreshJoin(spark, leftDir, rightDir, viewDir, joinKeys, joinType)
-      ()
-    }
-
-  /** [[refreshAgg]] driven by the source's change feed. */
-  def maintainAgg(spark: SparkSession, srcDir: String, viewDir: String,
-                  groupKeys: Seq[String], sumCols: Seq[String],
-                  sumScale: Int = 6, minMaxCols: Seq[String] = Nil,
-                  where: Option[Column] = None,
-                  transform: Option[DataFrame => DataFrame] = None,
-                  checkpointDir: String,
-                  trigger: org.apache.spark.sql.streaming.Trigger =
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    maintain(spark, Seq(srcDir), checkpointDir, trigger) { () =>
-      refreshAgg(spark, srcDir, viewDir, groupKeys, sumCols, sumScale,
-        minMaxCols, where, transform)
-      ()
-    }
 
   /** The view with multiplicities expanded back into duplicate rows —
     * exactly `left <type> JOIN right USING (joinKeys)` as a plain

@@ -830,12 +830,7 @@ object Snapshots {
     // with a bounded local parquet write. Falls back to the normal
     // write for distributed entries (over-budget manifests, scan-path
     // stats) or on any local-write failure.
-    val localRows =
-      if (spark.conf.getOption("spark.graft.manifest.localWrite")
-            .orElse(sys.env.get("SPARK_GRAFT_MANIFEST_LOCALWRITE"))
-            .getOrElse("true").toBoolean)
-        localEntryRows(full)
-      else None
+    val localRows = localEntryRows(full)
     val wroteLocal = localRows match {
       case Some(rows) =>
         try { writeParquetDriverSide(spark, f, tmp, full.schema, rows); true }

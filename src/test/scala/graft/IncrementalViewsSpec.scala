@@ -757,24 +757,25 @@ class IncrementalViewsSpec extends SparkSpec {
       statsCol = Some("k"))
     Snapshots.commit(Seq((1L, 1.0), (3L, 3.0)).toDF("k", "b"), r,
       statsCol = Some("k"))
+    def maintainJoin(trigger: Trigger = Trigger.AvailableNow()) =
+      IncrementalViews.maintain(spark, Seq(l, r), ckpt, trigger) { () =>
+        IncrementalViews.refreshJoin(spark, l, r, v, Seq("k")); ()
+      }
     // catch-up-and-stop: AvailableNow drains both feeds, ticks, exits
-    IncrementalViews.maintainJoin(spark, l, r, v, Seq("k"),
-      checkpointDir = ckpt).awaitTermination()
+    maintainJoin().awaitTermination()
     assertViewCurrent(l, r, v, Seq("k"))
 
     // a second catch-up from the SAME checkpoint sees only the new
     // versions (append left + delete right in one signal batch)
     Snapshots.commit(Seq((3L, "a3")).toDF("k", "a"), l, statsCol = Some("k"))
     Snapshots.deleteWhere(spark, r, col("k") === 1L)
-    IncrementalViews.maintainJoin(spark, l, r, v, Seq("k"),
-      checkpointDir = ckpt).awaitTermination()
+    maintainJoin().awaitTermination()
     assertViewCurrent(l, r, v, Seq("k"))
     assert(IncrementalViews.readExpanded(spark, v)
       .filter(col("k") === 1).count() == 0L)
 
     // always-on: commits made WHILE the query runs land in the view
-    val q = IncrementalViews.maintainJoin(spark, l, r, v, Seq("k"),
-      checkpointDir = ckpt, trigger = Trigger.ProcessingTime(0))
+    val q = maintainJoin(Trigger.ProcessingTime(0))
     try {
       Snapshots.commit(Seq((9L, "a9")).toDF("k", "a"), l, statsCol = Some("k"))
       Snapshots.commit(Seq((9L, 9.0)).toDF("k", "b"), r, statsCol = Some("k"))
@@ -790,13 +791,15 @@ class IncrementalViewsSpec extends SparkSpec {
     val (src, v, ckpt) = (tmpDir(), tmpDir(), tmpDir() + "/ck")
     Snapshots.commit(Seq(("a", 1.0), ("b", 2.0)).toDF("g", "x"), src,
       statsCol = Some("g"))
-    IncrementalViews.maintainAgg(spark, src, v, Seq("g"), Seq("x"),
-      minMaxCols = Seq("x"), checkpointDir = ckpt).awaitTermination()
+    def maintainAgg() = IncrementalViews.maintain(spark, Seq(src), ckpt) {
+      () => IncrementalViews.refreshAgg(spark, src, v, Seq("g"), Seq("x"),
+        minMaxCols = Seq("x")); ()
+    }
+    maintainAgg().awaitTermination()
     assertAggCurrent(src, v)
     Snapshots.commit(Seq(("a", 5.0)).toDF("g", "x"), src, statsCol = Some("g"))
     Snapshots.deleteWhere(spark, src, col("x") === 2.0)
-    IncrementalViews.maintainAgg(spark, src, v, Seq("g"), Seq("x"),
-      minMaxCols = Seq("x"), checkpointDir = ckpt).awaitTermination()
+    maintainAgg().awaitTermination()
     assertAggCurrent(src, v)
     assert(Snapshots.read(spark, v).filter(col("g") === "b").count() == 0L)
   }
@@ -1476,17 +1479,19 @@ class IncrementalViewsSpec extends SparkSpec {
       .select("doc_id", "text").limit(120).localCheckpoint(true)
     Snapshots.commit(docs.filter(col("doc_id") % 2 === 0), src,
       statsCol = Some("doc_id"))
+    def maintainIndex() = IncrementalViews.maintain(spark, Seq(src), ckpt) {
+      () => IncrementalViews.refreshTextIndex(spark, src, views, "doc_id",
+        "text")
+    }
     // catch-up-and-stop drains the feed, ticks all chains, exits
-    IncrementalViews.maintainTextIndex(spark, src, views, "doc_id", "text",
-      checkpointDir = ckpt).awaitTermination()
+    maintainIndex().awaitTermination()
     assert(served() == fresh() && served().nonEmpty)
     // a second catch-up from the SAME checkpoint folds only the new
     // versions (append + delete in one signal batch)
     Snapshots.commit(docs.filter(col("doc_id") % 2 === 1), src,
       statsCol = Some("doc_id"))
     Snapshots.deleteWhere(spark, src, col("doc_id") % 7 === 2)
-    IncrementalViews.maintainTextIndex(spark, src, views, "doc_id", "text",
-      checkpointDir = ckpt).awaitTermination()
+    maintainIndex().awaitTermination()
     assert(served() == fresh())
   }
 
@@ -2208,13 +2213,15 @@ class IncrementalViewsSpec extends SparkSpec {
         "doc_id", "text", k = 5)
     }
     assert(e.getMessage.contains("span_k"), e.getMessage)
-    // maintained wrapper catches up from its checkpoint
+    // the maintained profile catches up from its checkpoint
     val ck = tmpDir()
-    IncrementalViews.maintainSpanProfile(spark, src, views, "doc_id",
-      "text", ck).awaitTermination()
+    def maintainProfile() = IncrementalViews.maintain(spark, Seq(src), ck) {
+      () => IncrementalViews.refreshSpanProfile(spark, src, views, "doc_id",
+        "text")
+    }
+    maintainProfile().awaitTermination()
     Snapshots.deleteWhere(spark, src, col("doc_id") === 999999L)
-    IncrementalViews.maintainSpanProfile(spark, src, views, "doc_id",
-      "text", ck).awaitTermination()
+    maintainProfile().awaitTermination()
     val end = served()
     assert(end == fresh() && !end.contains(999999L))
     // SQL surface: a no-op refresh tick + the serve, both TVFs
@@ -2268,12 +2275,13 @@ class IncrementalViewsSpec extends SparkSpec {
         maxDistinct = 5)
     }
     assert(e2.getMessage.contains("coarsen"), e2.getMessage)
-    // maintained wrapper catch-up + SQL TVF parity
-    IncrementalViews.maintainValueHistogram(spark, src, view, "v", ck)
-      .awaitTermination()
+    // maintained catch-up + SQL TVF parity
+    def maintainHistogram() = IncrementalViews.maintain(spark, Seq(src), ck) {
+      () => IncrementalViews.refreshValueHistogram(spark, src, view, "v")
+    }
+    maintainHistogram().awaitTermination()
     Snapshots.deleteWhere(spark, src, col("id") > 150L)
-    IncrementalViews.maintainValueHistogram(spark, src, view, "v", ck)
-      .awaitTermination()
+    maintainHistogram().awaitTermination()
     assert(served(ps) == expected(ps))
     val viaSql = spark.sql(
         s"SELECT * FROM graft_quantiles('$view', '0.5,0.9,0.99')")
@@ -2726,7 +2734,7 @@ class IncrementalViewsSpec extends SparkSpec {
       rows(top))
   }
 
-  test("maintainCooccurrence/maintainBigramLm housekeepEvery settles debt on cadence") {
+  test("housekeeping scheduled in a maintain tick settles co-occurrence and bigram-LM debt") {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.functions._
     val (src, co, lm) = (tmpDir(), tmpDir(), tmpDir())
@@ -2735,10 +2743,18 @@ class IncrementalViewsSpec extends SparkSpec {
       .select("doc_id", "text").limit(60).localCheckpoint(true)
     Snapshots.commit(docs.filter(col("doc_id") % 2 === 0), src,
       statsCol = Some("doc_id"))
-    IncrementalViews.maintainCooccurrence(spark, src, co, "text",
-      checkpointDir = ck1, housekeepEvery = 1).awaitTermination()
-    IncrementalViews.maintainBigramLm(spark, src, lm, "text",
-      checkpointDir = ck2, housekeepEvery = 1).awaitTermination()
+    // every tick housekeeps (a cadence of 1)
+    def maintainBoth(): Unit = {
+      IncrementalViews.maintain(spark, Seq(src), ck1) { () =>
+        IncrementalViews.refreshCooccurrence(spark, src, co, "text")
+        IncrementalViews.housekeepCooccurrence(spark, co)
+      }.awaitTermination()
+      IncrementalViews.maintain(spark, Seq(src), ck2) { () =>
+        IncrementalViews.refreshBigramLm(spark, src, lm, "text")
+        IncrementalViews.housekeepBigramLm(spark, lm)
+      }.awaitTermination()
+    }
+    maintainBoth()
     // the tick committed v0 to each view; the SCHEDULED housekeep's
     // compaction published at least one version on top — without the
     // cadence an always-on maintainer accrues CoW debt until a manual
@@ -2750,10 +2766,7 @@ class IncrementalViewsSpec extends SparkSpec {
     Snapshots.commit(docs.filter(col("doc_id") % 2 === 1), src,
       statsCol = Some("doc_id"))
     Snapshots.deleteWhere(spark, src, col("doc_id") % 7 === 2)
-    IncrementalViews.maintainCooccurrence(spark, src, co, "text",
-      checkpointDir = ck1, housekeepEvery = 1).awaitTermination()
-    IncrementalViews.maintainBigramLm(spark, src, lm, "text",
-      checkpointDir = ck2, housekeepEvery = 1).awaitTermination()
+    maintainBoth()
     val served = IncrementalViews.readCooccurrence(spark, co)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
@@ -2973,17 +2986,19 @@ class IncrementalViewsSpec extends SparkSpec {
     // an s-prefix — corrupt them, the serve must not notice
     Snapshots.commit(Seq((1L, "apple banana apple cherry"))
       .toDF("doc_id", "text"), src, statsCol = Some("doc_id"))
-    IncrementalViews.maintainWordFreq(spark, src, wfreq, "text",
-      checkpointDir = ck1).awaitTermination()
-    IncrementalViews.maintainSpellIndex(spark, wfreq, idx, ck2,
-      maxEdits = 1).awaitTermination()
+    def maintainBoth(): Unit = {
+      IncrementalViews.maintain(spark, Seq(src), ck1) { () =>
+        IncrementalViews.refreshWordFreq(spark, src, wfreq, "text")
+      }.awaitTermination()
+      IncrementalViews.maintain(spark, Seq(wfreq), ck2) { () =>
+        IncrementalViews.refreshSpellIndex(spark, wfreq, idx, maxEdits = 1)
+      }.awaitTermination()
+    }
+    maintainBoth()
     Snapshots.commit(Seq((2L, "spark stream spark sort"), (3L, "spark"))
       .toDF("doc_id", "text"), src, statsCol = Some("doc_id"))
     Snapshots.deleteWhere(spark, src, col("doc_id") === 3L)
-    IncrementalViews.maintainWordFreq(spark, src, wfreq, "text",
-      checkpointDir = ck1).awaitTermination()
-    IncrementalViews.maintainSpellIndex(spark, wfreq, idx, ck2,
-      maxEdits = 1).awaitTermination()
+    maintainBoth()
     val lowW = Snapshots.manifest(spark, wfreq)
       .filter(col("stats_max") < "s").select("path")
       .collect().map(_.getString(0)).toSeq

@@ -95,6 +95,40 @@ class ManifestCacheSpec extends SparkSpec {
     assert((m.getString(0), m.getString(1)) == (("apple-pie", "zucchini-bread")))
   }
 
+  test("driver-side and Spark-written manifests agree; only the " +
+      "driver-side publish primes the cache") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq("apple-pie", "kiwi", "zucchini-bread").toDF("s").coalesce(1)
+    val (local, viaSpark) = (tmpDir(), tmpDir())
+    // footer-stats entries plan as a LocalRelation: driver-side write
+    Snapshots.commit(rows, local, statsCol = Some("s"))
+    // a configured truncate length (long enough to cut nothing here)
+    // sends the stats to the scan, whose entries are not driver-local:
+    // the manifest takes the Spark write
+    val key = "parquet.statistics.truncate.length"
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(key, "1024")
+    try Snapshots.commit(rows, viaSpark, statsCol = Some("s"))
+    finally hc.unset(key)
+    // the driver-side publish primed the cache: its first manifest
+    // read fires no job; the Spark-written one is read through
+    def firstRead(dir: String) =
+      jobsOf { Snapshots.manifest(spark, dir).collect() }
+    assert(firstRead(local) == 0)
+    assert(firstRead(viaSpark) >= 1)
+    // both files on disk: same schema, same entries but for the data
+    // file path and the commit stamp
+    def onDisk(dir: String) =
+      spark.read.parquet(s"$dir/_manifests/v${"%012d".format(0)}")
+    assert(onDisk(local).schema == onDisk(viaSpark).schema)
+    def entries(dir: String) =
+      onDisk(dir).drop("path", "committed_at").collect().map(_.toString).toSeq
+    assert(entries(local) == entries(viaSpark))
+    assert(Snapshots.read(spark, local).as[String].collect().sorted.toSeq ==
+      Snapshots.read(spark, viaSpark).as[String].collect().sorted.toSeq)
+  }
+
   test("a table recreated at the same path is NOT served from the old " +
       "cache entry") {
     val dir = tmpDir()

@@ -33,15 +33,18 @@ class MedallionServeSpec extends SparkSpec {
     val (ckText, ckWord, ckSpell) = (tmp(), tmp(), tmp())
 
     def tickServing(): Unit = {
-      IncrementalViews.maintainTextIndex(spark, silver, views,
-        "doc_id", "text", checkpointDir = ckText, positional = true)
-        .awaitTermination()
-      IncrementalViews.maintainWordFreq(spark, silver, wfreq, "text",
-        checkpointDir = ckWord).awaitTermination()
+      IncrementalViews.maintain(spark, Seq(silver), ckText) { () =>
+        IncrementalViews.refreshTextIndex(spark, silver, views,
+          "doc_id", "text", positional = true)
+      }.awaitTermination()
+      IncrementalViews.maintain(spark, Seq(silver), ckWord) { () =>
+        IncrementalViews.refreshWordFreq(spark, silver, wfreq, "text")
+      }.awaitTermination()
       // the spell index cascades off the word-freq VIEW's own feed —
       // zero corpus I/O
-      IncrementalViews.maintainSpellIndex(spark, wfreq, spell, ckSpell,
-        maxEdits = 1).awaitTermination()
+      IncrementalViews.maintain(spark, Seq(wfreq), ckSpell) { () =>
+        IncrementalViews.refreshSpellIndex(spark, wfreq, spell, maxEdits = 1)
+      }.awaitTermination()
     }
     def live() = Snapshots.read(spark, silver).select("doc_id", "text")
     def freshTop(terms: Seq[String], k: Int) =

@@ -201,8 +201,11 @@ class RegressionSpec extends SparkSpec {
       (i.toLong, "g" + (i % 2), x1, x2, 1.0 + 2.0 * x1 + 0.25 * x2)
     }.toDF("id", "g", "x1", "x2", "y")
     Snapshots.commit(batch(1, 30), src, statsCol = Some("g"))
-    IncrementalViews.maintainCorrMatrix(spark, src, v, Seq("g"), cols,
-      checkpointDir = ckpt).awaitTermination()
+    def maintainModel() =
+      IncrementalViews.maintain(spark, Seq(src), ckpt) { () =>
+        IncrementalViews.refreshCorrMatrix(spark, src, v, Seq("g"), cols); ()
+      }
+    maintainModel().awaitTermination()
     def servedEqualsFresh(): Unit = {
       val served = IncrementalViews.readOlsModel(spark, v, Seq("g"), cols,
         "y", Seq("x1", "x2")).collect()
@@ -215,8 +218,7 @@ class RegressionSpec extends SparkSpec {
     servedEqualsFresh()
     Snapshots.commit(batch(31, 60), src, statsCol = Some("g"))
     Snapshots.deleteWhere(spark, src, col("id") % 7 === 2)
-    IncrementalViews.maintainCorrMatrix(spark, src, v, Seq("g"), cols,
-      checkpointDir = ckpt).awaitTermination()
+    maintainModel().awaitTermination()
     servedEqualsFresh()
   }
 

@@ -7,8 +7,8 @@ import graft.sources.{IncrementalViews, Snapshots}
 /** The reference's windowed output TABLE (ksqldb-consumer
   * profiles/low_latency.sql:1-27) served END-TO-END from the view
   * layer: events land in a snapshot table batch by batch, a
-  * continuously-maintained aggregate view (maintainAgg off the change
-  * feed) keeps the per-(window, station, metric) state current — the
+  * continuously-maintained aggregate view (`maintain` over the change
+  * feed, ticking `refreshAgg`) keeps the per-(window, station, metric) state current — the
   * tumbling avg/min/max/count, the min/max offsets, and ksqlDB's
   * in-window LATEST_BY_OFFSET via a monotone max over an
   * (offset, payload) struct — and the served projection must equal
@@ -35,11 +35,13 @@ class WeatherOutputViewSpec extends SparkSpec {
     .withColumn("latest", struct(col("event_id").as("ord"), col("props")))
 
   private def maintainOnce(src: String, v: String, ckpt: String): Unit =
-    IncrementalViews.maintainAgg(spark, src, v,
-      groupKeys = Seq("wstart", "user_id", "event_type"),
-      sumCols = Seq("value"), sumScale = 2,
-      minMaxCols = Seq("value", "event_id", "latest"),
-      transform = Some(lens), checkpointDir = ckpt).awaitTermination()
+    IncrementalViews.maintain(spark, Seq(src), ckpt) { () =>
+      IncrementalViews.refreshAgg(spark, src, v,
+        groupKeys = Seq("wstart", "user_id", "event_type"),
+        sumCols = Seq("value"), sumScale = 2,
+        minMaxCols = Seq("value", "event_id", "latest"),
+        transform = Some(lens)); ()
+    }.awaitTermination()
 
   /** The view, projected into the reference output-table columns. */
   private def served(v: String): DataFrame =
