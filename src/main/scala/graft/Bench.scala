@@ -1,7 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main. Emits ONE compact JSON line as the final stdout
+/** The one timing and profiling harness. With no argument it is the
+  * benchmark main: it emits ONE compact JSON line as the final stdout
   * line. Compactness is load-bearing: the driver parses the line out
   * of a bounded tail of the sbt output (~2 KB), and rounds 2–5 all
   * overflowed it (`parsed: null`) once the query inventory grew past
@@ -16,7 +18,13 @@ import org.apache.spark.sql.SparkSession
   * transient machine-load spikes that made round 5's numbers
   * unexplainable (an 8-query "regression cluster" with byte-identical
   * plans). Failures are captured per query in an `errors` map instead
-  * of being swallowed as near-zero timings. */
+  * of being swallowed as near-zero timings.
+  *
+  * A first argument picks a mode for controlled-window measurement
+  * (interleave runs of two checkouts in one window): `one q [sf]
+  * [reps]`, `stream [sf] [reps]`, `profile q,q,… [sf] [reps]` or
+  * `plan [sf] [q …]`, e.g.
+  * `sbt "runMain graft.Bench one q_distinct_view_incr /root/testdata/sf0.1 3"`. */
 object Bench {
   private def r2(v: Double): Double = math.round(v * 100) / 100.0
   private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
@@ -48,7 +56,195 @@ object Bench {
     ((1 to 3).map(_ => calSpinMs()).min,
       (1 to 3).map(_ => calSparkMs(spark)).min)
 
+  private val defaultSfDir = "/root/testdata/sf0.1"
+
+  /** The session every mode runs on, with every table read once at
+    * `sfDir` (JVM, codegen and parquet-footer paths warm). */
+  private def session(sfDir: String): SparkSession = {
+    val spark =
+      GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
+    spark
+  }
+
+  /** Where a query's warm run reads: JIT and generated-class loading
+    * are per-query-shape one-time costs (up to ~3 s), paid here. */
+  private[graft] def warmDir(sfDir: String): String = {
+    val d = "/root/testdata/sf0.001"
+    if (new java.io.File(d).isDirectory) d else sfDir
+  }
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** One run of `fn` at `dir` into the noop sink, in seconds. noop,
+    * not count(): count() lets Catalyst prune every computed column
+    * out of select-shaped queries, timing little more than the scan;
+    * noop materializes the full result. */
+  private[graft] def timed(spark: SparkSession, fn: Query,
+                           dir: String): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def warm(spark: SparkSession, name: String, fn: Query,
+                   sfDir: String): Unit =
+    try timed(spark, fn, warmDir(sfDir))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warm run of $name failed: ${e.getMessage}")
+    }
+
+  /** `one` mode: `reps` timed runs of one query after its warm run. */
+  private[graft] def one(spark: SparkSession, name: String, sfDir: String,
+                         reps: Int): Seq[Double] = {
+    val fn = SparkEntry.queries(name)
+    warm(spark, name, fn, sfDir)
+    (1 to reps).map(_ => timed(spark, fn, sfDir))
+  }
+
+  /** The stream leg: seconds per drain of the whole events table
+    * through the watermarked windowed pipeline (file-stream stand-in
+    * for Kafka). A rep past 300 s is stopped and left out: a capped
+    * time would fabricate the throughput, and the still-running query
+    * would overlap the next rep. */
+  private[graft] def streamDrain(spark: SparkSession, sfDir: String,
+                                 reps: Int): Seq[Double] = {
+    val ts = (1 to reps).flatMap { _ =>
+      val t0 = System.nanoTime()
+      val out = streaming.WeatherPipeline.windowed(
+        Seq(Tables.eventsStream(spark, sfDir)),
+        "ts", Seq("event_type", "user_id"), "value", "event_id", "1 hour")
+      val q = out.writeStream.format("noop").outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      if (q.awaitTermination(300000)) Some((System.nanoTime() - t0) / 1e9)
+      else {
+        q.stop()
+        System.err.println("[bench] stream rep exceeded 300s — excluded")
+        None
+      }
+    }
+    require(ts.nonEmpty, "every stream rep timed out — no measurement to report")
+    ts
+  }
+
+  /** `profile` mode: like [[one]], but prints per rep every Spark job
+    * it submitted (PROFILE; wall minus job walls is driver-side work),
+    * the jobs by description (DESC) and the `Jobs.labeled` phase walls
+    * (PHASE). Returns the job count per rep. */
+  private[graft] def profile(spark: SparkSession, name: String,
+                             sfDir: String, reps: Int): Seq[Int] = {
+    case class Job(start: Long, desc: String, var end: Long = 0L,
+                   var tasks: Int = 0) { def ms = math.max(0L, end - start) }
+    val fn = SparkEntry.queries(name)
+    warm(spark, name, fn, sfDir)
+    (1 to reps).map { rep =>
+      val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
+      val stageToJob = scala.collection.mutable.HashMap[Int, Int]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = {
+          val d = Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse("")
+          jobs.synchronized {
+            jobs(js.jobId) = Job(js.time, d)
+            js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
+          }
+        }
+        override def onJobEnd(je: SparkListenerJobEnd): Unit =
+          jobs.synchronized { jobs.get(je.jobId).foreach(_.end = je.time) }
+        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+          jobs.synchronized {
+            stageToJob.get(sc.stageInfo.stageId).flatMap(jobs.get)
+              .foreach(_.tasks += sc.stageInfo.numTasks)
+          }
+      }
+      Jobs.drain() // phases of the warm run and earlier reps
+      spark.sparkContext.addSparkListener(listener)
+      val wall =
+        try timed(spark, fn, sfDir)
+        finally {
+          Thread.sleep(300) // the listener bus delivers asynchronously
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      val snap = jobs.synchronized(jobs.values.toVector)
+      val sumMs = snap.map(_.ms).sum
+      println(f"PROFILE $name rep=$rep wall=$wall%.2f s jobs=${snap.size} jobWallSum=${sumMs / 1000.0}%.2f s driverGap=${wall - sumMs / 1000.0}%.2f s")
+      snap.groupBy(_.desc).toSeq
+        .map { case (d, js) => (d, js.size, js.map(_.ms).sum, js.map(_.tasks).sum) }
+        .sortBy(-_._3).foreach { case (d, n, ms, tk) =>
+          println(f"  DESC ${d.take(50)}%-50s n=$n%3d total=${ms / 1000.0}%7.2f s tasks=$tk%5d")
+        }
+      Jobs.drain().toSeq.sortBy(-_._2._1).foreach { case (d, (ns, calls)) =>
+        println(f"  PHASE ${d.take(50)}%-50s n=$calls%4d wall=${ns / 1e9}%7.2f s")
+      }
+      snap.size
+    }
+  }
+
+  /** `plan` mode: the `explain("formatted")` dump of one query, for
+    * reviewing scan pushdown (PushedFilters/ReadSchema), broadcast
+    * choices and WholeStageCodegen spans. */
+  private[graft] def plan(spark: SparkSession, name: String,
+                          sfDir: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  /** Stop the session, print `last` and halt(0): exit code 0 keeps
+    * sbt's `[success]` trailer, and halt (unlike exit) runs no shutdown
+    * hook, so nothing can follow `last` (fork := true makes it safe). */
+  private def halt(spark: SparkSession, last: Option[String] = None): Unit = {
+    spark.stop()
+    last.foreach(println)
+    System.out.flush()
+    Runtime.getRuntime.halt(0)
+  }
+
   def main(args: Array[String]): Unit = {
+    def sfArg(i: Int) = args.lift(i).getOrElse(defaultSfDir)
+    def repsArg(i: Int, default: Int) = args.lift(i).map(_.toInt).getOrElse(default)
+    def fmt(ts: Seq[Double]) = ts.map(t => f"$t%.2f").mkString(",")
+    args.headOption match {
+      case None => full()
+      case Some("one") =>
+        val (name, sfDir) = (args(1), sfArg(2))
+        val spark = session(sfDir)
+        val ts = one(spark, name, sfDir, repsArg(3, 3))
+        println(f"BENCHONE $name reps=${fmt(ts)} min=${ts.min}%.2f")
+        halt(spark)
+      case Some("stream") =>
+        val sfDir = sfArg(1)
+        val spark = session(sfDir)
+        val nEvents = Tables.load(spark, sfDir, "events").count()
+        val ts = streamDrain(spark, sfDir, repsArg(2, 5))
+        println(f"BENCHSTREAM n_events=$nEvents reps=${fmt(ts)} " +
+          f"min=${ts.min}%.2f msgs_per_s=${math.round(nEvents / ts.min)}")
+        halt(spark)
+      case Some("profile") =>
+        val sfDir = sfArg(2)
+        val spark = session(sfDir)
+        args(1).split(',').foreach(profile(spark, _, sfDir, repsArg(3, 1)))
+        halt(spark)
+      case Some("plan") =>
+        // plans are shape-only: the default is the smallest SF
+        val sfDir = args.lift(1).getOrElse(warmDir(defaultSfDir))
+        val names =
+          if (args.length > 2) args.drop(2).toSeq
+          else SparkEntry.queries.keys.toSeq.sorted
+        val spark = session(sfDir)
+        names.foreach { n =>
+          println(s"\n========== $n ==========")
+          println(plan(spark, n, sfDir))
+        }
+        halt(spark)
+      case Some(m) =>
+        sys.error(s"unknown mode $m: expected one, stream, profile or plan")
+    }
+  }
+
+  /** The full bench: every query, the stream leg and the throughput
+    * sweep; the compact line last. */
+  private def full(): Unit = {
     // Round 7's line was displaced from the driver's bounded tail by a
     // ~1.9 KB netty stack trace printed on stderr DURING JVM SHUTDOWN,
     // after main returned. Two defenses: silence the known shutdown
@@ -62,25 +258,14 @@ object Bench {
       Configurator.setLevel("org.apache.spark.network", Level.OFF)
       Configurator.setLevel("org.apache.spark.rpc", Level.OFF)
     } catch { case _: Throwable => () }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(3, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-    // warm the JVM/codegen/parquet-footer paths so the first timed
-    // query doesn't absorb one-time startup cost
-    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    // …and run every query once at the smallest SF: JIT + generated-
-    // class loading are per-query-shape one-time costs (measured up to
-    // ~3s on first use of e.g. the JSON path parser). The benchmark
-    // should measure steady-state throughput — what a long-running
-    // cluster job sees — not class-loader latency.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
+    val spark = session(sfDir)
+    // warm every query once: the benchmark should measure steady-state
+    // throughput — what a long-running cluster job sees — not
+    // class-loader latency
+    SparkEntry.queries.foreach { case (name, fn) => warm(spark, name, fn, sfDir) }
     // calibration BEFORE the query block (session live, tables warm,
     // queries not yet run) — paired with the post-run reading below
     val (calSpinPre, calSparkPre) = calPair(spark)
@@ -91,38 +276,19 @@ object Bench {
           .replaceAll("[\"\\\\\n\r\t]", " ").take(60))
     val repTimes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        // noop sink, not count(): count() lets Catalyst prune every
-        // computed column out of select-shaped queries, timing little
-        // more than the scan; noop materializes the full result
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable => recordErr(name, e); None }
+        try Some(timed(spark, fn, sfDir))
+        catch { case e: Throwable => recordErr(name, e); None }
       }
       name -> times
     }
-    val results = repTimes.map { case (name, ts) =>
-      name -> (if (ts.isEmpty) -1.0 else ts.min)
-    }
-    // streaming throughput leg — the reference is a stream benchmark:
-    // drain the whole events table through the watermarked windowed
-    // pipeline (file-stream stand-in for Kafka) and time it
+    def minOr(ts: Seq[Double]) = if (ts.isEmpty) -1.0 else ts.min
+    // streaming throughput leg — the reference is a stream benchmark
     val nEvents = try Tables.load(spark, sfDir, "events").count()
       catch { case e: Throwable => recordErr("events_count", e); -1L }
-    val streamTimes = (1 to reps).flatMap { _ =>
-      val t0 = System.nanoTime()
-      try {
-        val out = streaming.WeatherPipeline.windowed(
-          Seq(Tables.eventsStream(spark, sfDir)),
-          "ts", Seq("event_type", "user_id"), "value", "event_id", "1 hour")
-        val q = out.writeStream.format("noop").outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(300000)
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => recordErr("q_stream_pipeline", e); None }
-    }
-    val streamSec = if (streamTimes.isEmpty) -1.0 else streamTimes.min
+    val streamTimes =
+      try streamDrain(spark, sfDir, reps)
+      catch { case e: Throwable => recordErr("q_stream_pipeline", e); Nil }
+    val streamSec = minOr(streamTimes)
     // the reference's own published metric is stream throughput at a
     // 100 msg/s producer target (latency-monitor benchmark-results) —
     // report ours in the same unit for a direct comparison
@@ -149,10 +315,12 @@ object Bench {
     // calibration AFTER everything timed — drift between the two
     // readings brackets the run's window health
     val (calSpinPost, calSparkPost) = calPair(spark)
-    val calJson = s""","cal_ms":[${r2(calSpinPre)},${r2(calSpinPost)},""" +
-      s"""${r2(calSparkPre)},${r2(calSparkPost)}]"""
+    def cal(f: Double => Any) =
+      Seq(calSpinPre, calSpinPost, calSparkPre, calSparkPost).map(f)
+        .mkString(""","cal_ms":[""", ",", "]")
 
-    val all = results :+ ("q_stream_pipeline" -> streamSec)
+    val allTimes = repTimes :+ ("q_stream_pipeline" -> streamTimes)
+    val all = allTimes.map { case (name, ts) => name -> minOr(ts) }
     val errs =
       if (errors.isEmpty) ""
       else errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
@@ -160,11 +328,11 @@ object Bench {
     val total = r2(all.map(_._2).filter(_ >= 0).sum)
 
     // full-precision record (canonical q_* names, every rep) → file
-    val fullQs = (repTimes :+ ("q_stream_pipeline" -> streamTimes))
+    val fullQs = allTimes
       .map { case (k, ts) => "\"" + k + "\":" + ts.map(r3).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val sweepJson = sweep.map(_.json).getOrElse("null")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"agg":"min","stream_msgs_per_s":$streamRate,"n_events":$nEvents,"cpus":$cpus$calJson,"sweep":$sweepJson$errs,"rep_times":$fullQs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"agg":"min","stream_msgs_per_s":$streamRate,"n_events":$nEvents,"cpus":$cpus${cal(r2)},"sweep":$sweepJson$errs,"rep_times":$fullQs,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json", "UTF-8")
       try w.println(full) finally w.close()
@@ -178,27 +346,14 @@ object Bench {
     val sfName = new java.io.File(sfDir).getName
     // the cal block rides the line at whole-ms (≈30B — the budget
     // composer keeps it on every rung; full precision is in the file)
-    val calLine = s""","cal_ms":[${math.round(calSpinPre)},""" +
-      s"""${math.round(calSpinPost)},${math.round(calSparkPre)},""" +
-      s"""${math.round(calSparkPost)}]"""
     val line = BenchLine.compose(total, reps, streamRate, errs, all, sfName,
-      cal = calLine)
+      cal = cal(math.round))
     // belt-and-braces: no late stack trace (netty shutdown, executor
     // teardown) can ever race the tail again — stderr goes to the void
     // from here on; BENCH_FULL.json already has everything of value
     try System.setErr(new java.io.PrintStream(
       java.io.OutputStream.nullOutputStream())) catch { case _: Throwable => () }
-    spark.stop()
-    println(line)
-    // The line MUST be the last bytes this process emits. spark.stop()
-    // returned, BENCH_FULL.json is on disk — nothing of value can still
-    // happen, but netty/RPC shutdown hooks and daemon threads CAN still
-    // print stack traces (they did in round 7, clobbering the driver's
-    // bounded tail for the 7th time). fork := true (build.sbt), so
-    // halting this JVM is safe: flush stdout, then halt(0) — exit code
-    // 0 keeps sbt's `[success]` trailer, and halt (unlike exit) runs no
-    // shutdown hooks, so nothing can follow the line.
-    System.out.flush()
-    Runtime.getRuntime.halt(0)
+    // the line MUST be the last bytes this process emits
+    halt(spark, Some(line))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Job labeling (guide §1.5) + per-phase wall-time accounting for the
   * multi-action storage operators. `labeled` stamps a job description
   * over the dynamic extent of a phase — every Spark job fired inside
-  * shows up in the UI (and in [[JobProfile]]'s per-description rollup)
+  * shows up in the UI (and in `Bench profile`'s per-description rollup)
   * under that name — and accumulates the phase's WALL time in a global
   * table so driver-side cost (planning, FS metadata, collects) is
   * attributable too, not just task time. The accounting is a few map

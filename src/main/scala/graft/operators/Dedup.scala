@@ -37,14 +37,6 @@ object Dedup {
   private def toks(textCol: String): Column =
     array_distinct(split(col(textCol), " "))
 
-  /** Exact token-set Jaccard for a candidate pair, from the two
-    * distinct-token arrays: |∩| / (|a|+|b|−|∩|). Integer-derived
-    * double division — bit-identical across engines. */
-  private def jaccard(a: Column, b: Column): Column = {
-    val common = size(array_intersect(a, b)).cast("double")
-    common / (size(a) + size(b) - size(array_intersect(a, b)))
-  }
-
   /** MinHash + LSH near-dup pairs.
     *
     * shingle→minhash→band→bucket-join: per row a `numHashes`-long

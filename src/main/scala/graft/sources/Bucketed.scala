@@ -36,7 +36,7 @@ object Bucketed {
 
   /** Join two bucketed tables on their bucket key. When both were
     * written with the same bucket count over `keys`, the plan contains
-    * no Exchange (verify with BucketedSpec / PlanAudit). */
+    * no Exchange (verify with BucketedSpec / `graft.Bench plan`). */
   def cojoin(
       spark: SparkSession,
       leftTable: String,

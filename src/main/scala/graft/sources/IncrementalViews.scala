@@ -359,6 +359,20 @@ object IncrementalViews {
       keys.map(k => col(s"t.$k") <=> col(s"af.$k")).reduce(_ && _),
       "left_semi")
 
+  /** The keyed-replace batch of an affected-key recompute for
+    * [[Snapshots.mergeStreamBatch]]: the view's current rows for the
+    * `affected` keys as deletes, then `fresh` as upserts. */
+  private def replaceKeys(spark: SparkSession, viewDir: String,
+                          specs: Seq[(String, Seq[(Any, Any)])],
+                          affected: DataFrame, keys: Seq[String],
+                          fresh: DataFrame): DataFrame = {
+    val up = fresh.withColumn("__op", lit("u")).withColumn("__seq", lit(1L))
+    if (Snapshots.latestVersion(spark, viewDir).isEmpty) up
+    else nullSafeSemi(readForSpecs(spark, viewDir, None, specs), affected, keys)
+      .withColumn("__op", lit("d")).withColumn("__seq", lit(0L))
+      .unionByName(up)
+  }
+
   private val JoinTypes = Map(
     "inner" -> "inner",
     "left" -> "left_outer", "left_outer" -> "left_outer",
@@ -476,17 +490,10 @@ object IncrementalViews {
           val fresh = recomputed.groupBy(valueCols.map(col): _*)
             .agg(sum(coalesce(wl, lit(1L)) * coalesce(wr, lit(1L)))
               .as("__n"))
-            .withColumn("__op", lit("u")).withColumn("__seq", lit(1L))
-          val viewExists = Snapshots.latestVersion(spark, viewDir).isDefined
-          val stale =
-            if (!viewExists) fresh.limit(0)
-            else nullSafeSemi(
-              readForSpecs(spark, viewDir, None, specs),
-              affected, joinKeys)
-              .withColumn("__op", lit("d")).withColumn("__seq", lit(0L))
           // O(churn) rows — persisted so the emptiness probe and the
           // merge run the recompute ONCE, not twice
-          val changes = stale.unionByName(fresh).persist()
+          val changes =
+            replaceKeys(spark, viewDir, specs, affected, joinKeys, fresh).persist()
           // keys = the full value tuple (the Z-set identity); __n is the
           // value a same-tuple upsert replaces; file pruning AND file
           // clustering on the first join key — the merge range-partitions
@@ -827,15 +834,10 @@ object IncrementalViews {
   /** Incrementally-maintained per-key TOP-K view — the continuously-
     * current leaderboard: each `partitionKeys` group's k best rows by
     * `orderCol` (descending unless `ascending`), stored with their
-    * 1-based `__rank`. Maintained by affected-key recompute, the only
-    * plan that stays correct under deletes: a change-feed key's group
-    * is re-ranked from the CURRENT source (manifest-pruned to the
-    * affected keys' bounds + semi-join), and the view's rows for
-    * exactly those keys are replaced — a demoted or deleted leader is
-    * displaced by whatever NOW ranks k-th, which no delta-only fold
-    * could know. Untouched groups are never read. The merge is keyed
-    * by (partitionKeys, __rank): a shrunken group's trailing ranks
-    * are deleted, the rest upsert in place.
+    * 1-based `__rank`. Maintained by affected-key recompute
+    * ([[perKeyTick]]), the only plan that stays correct under deletes:
+    * a demoted or deleted leader is displaced by whatever NOW ranks
+    * k-th, which no delta-only fold could know.
     *
     * `orderCol` + `tieBreak` must totally order each group (e.g. a
     * unique id as the last tie-break) or ranks beyond the tie are
@@ -848,76 +850,49 @@ object IncrementalViews {
                   ascending: Boolean = false): Seq[Long] = {
     require(partitionKeys.nonEmpty, "refreshTopK needs at least one key")
     require(k > 0, s"k must be positive: $k")
-    withSourceTick(spark, srcDir, viewDir, "_topk_state",
-        rereadsSource = true) { (spark, changes, tick) =>
-      val keyCols = partitionKeys.map(col)
-      val affected = changes.select(keyCols: _*).distinct().persist()
-      try {
-        val (nAffected, specs) = keySpecs(affected, partitionKeys, viewDir,
-          coarse = Snapshots.cachedFileCount(spark, srcDir).exists(_ <= 8))
-        if (nAffected != 0L) {
-          val srcAff = nullSafeSemi(
-            readForSpecs(spark, srcDir, Some(tick.to), specs),
-            affected, partitionKeys)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keyCols: _*)
-            .orderBy((if (ascending) col(orderCol).asc
-                      else col(orderCol).desc) +:
-              tieBreak.map(col(_).asc): _*)
-          val fresh = srcAff
-            .withColumn("__rank", row_number().over(w).cast("long"))
-            .filter(col("__rank") <= k)
-            .withColumn("__op", lit("u")).withColumn("__seq", lit(1L))
-          val viewExists = Snapshots.latestVersion(spark, viewDir).isDefined
-          val stale =
-            if (!viewExists) fresh.limit(0)
-            else nullSafeSemi(
-              readForSpecs(spark, viewDir, None, specs),
-              affected, partitionKeys)
-              .withColumn("__op", lit("d")).withColumn("__seq", lit(0L))
-          // O(churn) rows — persisted so the emptiness probe and the
-          // merge run the re-ranking ONCE, not twice
-          val out = stale.unionByName(fresh).persist()
-          try {
-            if (!out.isEmpty)
-              Snapshots.mergeStreamBatch(out, viewDir, tick.to,
-                keyCols = partitionKeys :+ "__rank",
-                opCol = "__op", seqCol = "__seq",
-                pruneCol = Some(partitionKeys.head),
-                clusterBy = Some(partitionKeys.head),
-                extraStatsCols = extraKeyStats(partitionKeys))
-          } finally out.unpersist()
-        }
-      } finally affected.unpersist()
-      ()
-    }
+    perKeyTick(spark, srcDir, viewDir, "_topk_state", partitionKeys,
+      (if (ascending) col(orderCol).asc else col(orderCol).desc) +:
+        tieBreak.map(col(_).asc),
+      Some(k), identity)
   }
 
   /** Generic INCREMENTALLY-MAINTAINED PER-KEY DERIVED VIEW — the
-    * affected-key-recompute machinery [[refreshTopK]] uses, opened to
-    * ANY key-local derivation: per tick, the change feed names the
-    * churned keys, `derive` re-runs over ONLY those keys' current
-    * source rows (manifest-pruned + semi-joined), and the view's rows
-    * for exactly those keys are replaced — the plan that stays
-    * correct under arbitrary insert/update/delete mixes for
-    * derivations no delta fold can express (windowed session
-    * assignment, ordered funnels, anything whose per-key output is a
-    * global function of the key's rows).
+    * affected-key recompute [[refreshTopK]] uses ([[perKeyTick]]),
+    * opened to ANY key-local derivation no delta fold can express
+    * (windowed session assignment, ordered funnels, anything whose
+    * per-key output is a global function of the key's rows).
     *
     * Contract: `derive` must be DETERMINISTIC and KEY-LOCAL — every
     * output row for key k derives only from input rows with key k
     * (so recomputing a key from its own rows alone is exact) — and
     * must carry `keyCols` through. `rowOrder` names columns that
     * totally order each key's output rows (they become the stored
-    * `__rank` the keyed merge replaces in place; a shrunken key's
-    * trailing ranks are deleted). An EMPTY `rowOrder` asserts the
+    * `__rank`). An EMPTY `rowOrder` asserts the
     * derivation emits AT MOST ONE row per key — violated, the tick
     * fails loudly instead of storing nondeterministic ranks. */
   def refreshPerKey(spark: SparkSession, srcDir: String, viewDir: String,
                     keyCols: Seq[String], rowOrder: Seq[String],
                     derive: DataFrame => DataFrame): Seq[Long] = {
     require(keyCols.nonEmpty, "refreshPerKey needs at least one key")
-    withSourceTick(spark, srcDir, viewDir, "_derived_state",
+    perKeyTick(spark, srcDir, viewDir, "_derived_state", keyCols,
+      rowOrder.map(col(_).asc), None, derive)
+  }
+
+  /** One affected-key recompute tick of [[refreshTopK]] and
+    * [[refreshPerKey]]: the change feed names the churned keys, their
+    * CURRENT source rows (manifest-pruned to the keys' bounds +
+    * semi-joined) go through `derive` and are ranked by `order` within
+    * each key (up to `limit` ranks), and the view's rows for exactly
+    * those keys are replaced. Untouched keys are never read. The merge
+    * is keyed by (keys, __rank): a shrunken key's trailing ranks are
+    * deleted, the rest upsert in place. An empty `order` asserts
+    * `derive` emits at most one row per key; the tick fails if not. */
+  private def perKeyTick(spark: SparkSession, srcDir: String,
+                         viewDir: String, stateName: String,
+                         keyCols: Seq[String], order: Seq[Column],
+                         limit: Option[Int],
+                         derive: DataFrame => DataFrame): Seq[Long] =
+    withSourceTick(spark, srcDir, viewDir, stateName,
         rereadsSource = true) { (spark, changes, tick) =>
       val kCols = keyCols.map(col)
       val affected = changes.select(kCols: _*).distinct().persist()
@@ -925,31 +900,23 @@ object IncrementalViews {
         val (nAffected, specs) = keySpecs(affected, keyCols, viewDir,
           coarse = Snapshots.cachedFileCount(spark, srcDir).exists(_ <= 8))
         if (nAffected != 0L) {
-          val srcAff = nullSafeSemi(
+          val derived = derive(nullSafeSemi(
             readForSpecs(spark, srcDir, Some(tick.to), specs),
-            affected, keyCols)
-          val derived = derive(srcAff)
+            affected, keyCols))
           require(keyCols.forall(derived.columns.contains),
             s"derive must carry the key columns ${keyCols.mkString(", ")}")
-          val orderCols: Seq[Column] =
-            if (rowOrder.isEmpty) Seq(lit(1L).asc)
-            else rowOrder.map(col(_).asc)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(kCols: _*)
-            .orderBy(orderCols: _*)
-          val fresh = derived
+            .orderBy((if (order.isEmpty) Seq(lit(1L).asc) else order): _*)
+          val ranked = derived
             .withColumn("__rank", row_number().over(w).cast("long"))
-            .withColumn("__op", lit("u")).withColumn("__seq", lit(1L))
-          val viewExists = Snapshots.latestVersion(spark, viewDir).isDefined
-          val stale =
-            if (!viewExists) fresh.limit(0)
-            else nullSafeSemi(
-              readForSpecs(spark, viewDir, None, specs),
-              affected, keyCols)
-              .withColumn("__op", lit("d")).withColumn("__seq", lit(0L))
-          val out = stale.unionByName(fresh).persist()
+          val fresh = limit.foldLeft(ranked)((df, n) => df.filter(col("__rank") <= n))
+          // O(churn) rows — persisted so the checks and the merge run
+          // the re-ranking ONCE
+          val out =
+            replaceKeys(spark, viewDir, specs, affected, keyCols, fresh).persist()
           try {
-            if (rowOrder.isEmpty)
+            if (order.isEmpty)
               require(out.filter(col("__op") === "u" && col("__rank") > 1L)
                   .limit(1).isEmpty,
                 "derive emitted more than one row for a key but rowOrder " +
@@ -966,7 +933,6 @@ object IncrementalViews {
       } finally affected.unpersist()
       ()
     }
-  }
 
   /** INCREMENTALLY-MAINTAINED SESSION STATS — the max-gap
     * sessionization rollup ([[graft.operators.Relational.sessionStats]])

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
 
 /** Custom-state analog of the reference latency monitor's window
   * tracker (latency-monitor LatencyMonitor.scala: collectLatencyData
